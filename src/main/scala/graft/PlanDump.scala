@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * commit under plans/.
   *   sbt "runMain graft.PlanDump plans/r15 before q141_pagerank,q205_bfs_hops"
   * writes plans/r15/<name>_before.txt per query. Query names accept
-  * prefixes (the Verify/Bench convention).
+  * prefixes (the Verify/Bench convention). Dataset actions the query
+  * runs while it is built (driver collects, e.g. a JX cube's sparse
+  * aggregate) are dumped first, each with its executed plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,6 +26,18 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val eager = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(action: String,
+                      qe: org.apache.spark.sql.execution.QueryExecution,
+                      durationNs: Long): Unit =
+          eager.add(s"== Eager action: $action ==\n" +
+            qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+        def onFailure(action: String,
+                      qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      })
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.exists(n.startsWith) }
@@ -31,7 +45,11 @@ object PlanDump {
         val txt =
           try {
             val df = fn(spark, sfDir)
-            df.queryExecution.explainString(
+            org.apache.spark.sql.graft.bridge
+              .drainListenerBus(spark.sparkContext)
+            val built = Iterator.continually(eager.poll())
+              .takeWhile(_ != null).mkString
+            built + df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
           } catch { case e: Throwable =>
             s"PLAN-ERROR: ${Option(e.getMessage).getOrElse(e.getClass.getName)}"

@@ -88,11 +88,10 @@ private[graft] object QueriesJx {
                    "aggregate": "average"}]}""")),
 
 
-    // --- WIDE dense cube (round 12): 37,500 range cells sits BETWEEN
-    //     the domain-product guard's broadcast threshold (32,768) and
-    //     its hard cap (100,000), so this query drives the
-    //     merge-hinted NON-broadcast dense join under the correctness
-    //     gate at both SFs — empty cells densify (count 0, sum null) ---
+    // --- WIDE dense cube (round 12): 37,500 range cells, under the
+    //     domain-product guard's cap (100,000), so this query drives a
+    //     wide driver-side densification under the correctness gate at
+    //     both SFs — empty cells densify (count 0, sum null) ---
     "q358_wide_cube" -> jx("""
       {"from": "lineitem",
        "edges": [{"name": "ok_bucket", "value": "l_orderkey",

@@ -167,8 +167,8 @@ private[graft] object QueriesLlmD {
     val isTrain = !col("drp") && col("sp") === "train"
     // stages 1-4: thirteen conditional aggregates, ONE pass. The
     // kept⨝cluster join is row-preserving (corpus ids are distinct
-    // and kept ⊆ corpus), so stage 1's census reads off the same
-    // frame.
+    // and kept ⊆ corpus — TrainingChainSpec checks the latter), so
+    // stage 1's census reads off the same frame.
     val wide14 = annotated.agg(
       count(lit(1)).as("m1_n_docs"),
       sum(col("n_tok")).as("m1_n_tokens"),
@@ -343,7 +343,7 @@ private[graft] object QueriesLlmD {
     * q388/q342/q356 — the "never re-mine what a sibling mined"
     * discipline). Used by q403 (full chain) and q409 (epoch stage
     * over the chain's selection). */
-  private def batchChainArtifacts(spark: SparkSession, dir: String)
+  private[graft] def batchChainArtifacts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val K = 15
     val docs = tbl(spark, dir, "documents")

@@ -16,7 +16,9 @@ import graft.tables.Catalog
   * Only the (small) result is serialized on the driver; the reference's
   * service-level default limit (ActiveData defaults to 10 —
   * SURVEY.md §2g O2) is applied here, NOT in the engine, exactly like
-  * the reference.
+  * the reference. A cube is densified on the driver, bounded by the
+  * `spark.graft.cube.maxCells` cap that [[graft.jx.Domains.denseCube]]
+  * checks before it aggregates.
   */
 object Service {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -100,8 +102,9 @@ object Service {
     // every group onto the driver (render() serializes the whole
     // result) — so the raw-groupby aggregate path gets the same cap: a
     // driver-protection bound, not engine semantics. EDGES queries are
-    // exempt: their output is bounded by the declared/derived domain
-    // (DefaultDomain caps at its own limit), and Formats.toCube
+    // exempt: their output is bounded by the domain product, which
+    // denseCube checks against spark.graft.cube.maxCells before it
+    // aggregates, and Formats.toCube
     // requires a DENSE input — an injected limit would hand toCube an
     // arbitrary plan-dependent row subset and corrupt the cube. toCube
     // itself now fails loudly on non-dense input as a backstop.

@@ -1,172 +1,133 @@
 package graft.jx
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** JX `edges` + domains -> dense cube (SURVEY.md §2e; public repo
   * `vendor/jx_base/domains.py`, `jx_python/cubes/aggs.py`).
   *
-  * Plan shape (scales to 100 TB — no driver-side collect anywhere):
+  * Plan shape:
   * {{{
-  *   bucketed = fact.withColumn(bucket_i, bucketExpr_i ...)
-  *   sparse   = bucketed.groupBy(bucket_*).agg(...)       // partial+final
-  *   domain   = crossJoin of per-edge domain DFs          // tiny, broadcast
-  *   dense    = domain.join(sparse, keys <=> , "left")    // broadcast-left
+  *   domain_i = ordered value list on the driver   // static, or a top-k collect
+  *   guard    = Π(|domain_i| + allowNulls_i) <= spark.graft.cube.maxCells
+  *   sparse   = fact.groupBy(key_i ...).agg(...).collect()  // partial+final
+  *   dense    = local relation: every domain combination, domain order
   * }}}
-  * Domain tables are a few rows per edge (|partitions| or (max-min)/interval
-  * or top-k) and the sparse side is post-aggregation (bounded by the domain
-  * product), so the dense join broadcasts the sparse side and never
-  * shuffles the fact table a second time. The DefaultDomain top-k is itself
-  * a distributed groupBy/count/limit — two passes over the fact, zero
-  * collects.
+  * The fact table is scanned by ONE distributed aggregate (plus the
+  * top-k aggregate per DefaultDomain edge). Only post-aggregation rows
+  * reach the driver — at most Π(|domain_i| + 1) of them — and the cap on
+  * the exact domain product is checked before the fact aggregate runs,
+  * so every collect here is bounded by the cap at any scale.
   */
 object Domains {
   import DomainSpec._
 
-  /** Bucket expression + ordered domain DataFrame for one edge.
-    * Domain DF columns: value (named edge.name) + __ord for output order.
-    * `membershipFromDomain` marks data-driven domains (DefaultDomain):
-    * bucket values outside the domain must be nullified (into the
-    * overflow partition) via a broadcast membership join — the domain is
-    * data-dependent, so membership can't be a literal predicate.
-    * `maxCardinality` is the STATIC upper bound on the domain size
-    * (|partitions|, range steps, or DefaultDomain's top-k limit); the
-    * true size may be smaller for data-driven domains — the guard in
-    * [[denseCube]] counts actuals only when this bound trips. */
-  final case class EdgePlan(bucket: Column, domain: DataFrame,
-                            membershipFromDomain: Boolean = false,
-                            maxCardinality: Int = Int.MaxValue)
+  /** One edge, resolved on the driver: the per-row grouping `key`, the
+    * ordered domain `keys` it is matched against, and the output
+    * `values` (same order) of type `dataType`. Set, predicate and
+    * default domains key by the value itself; time, range and duration
+    * domains key by the bucket ordinal, so no dense cell depends on
+    * float or timestamp equality between the driver and Spark. A null
+    * key is the overflow partition; a non-null key outside `keys`
+    * reaches no cell. */
+  private final case class Edge(key: Column, keys: IndexedSeq[Any],
+                                values: IndexedSeq[Any], dataType: DataType)
 
-  def plan(spark: SparkSession, df: DataFrame, edge: EdgeClause,
-           compiler: ExprCompiler): EdgePlan = {
+  private def plan(df: DataFrame, edge: EdgeClause,
+                   compiler: ExprCompiler): Edge = {
     val name = edge.name
+    def value = compiler.compile(edge.value.getOrElse(
+      throw new IllegalArgumentException(s"edge $name needs a value")))
     edge.domain match {
       case SetDomain(parts) =>
-        val v = compiler.compile(edge.value.getOrElse(
-          throw new IllegalArgumentException(s"edge $name needs a value")))
+        val v = value
         val dt = sparkTypeOfValue(parts)
-        val norm = parts.map(normalizeTo(dt, _))
-        val schema = StructType(Seq(
-          StructField(name, dt, nullable = true),
-          StructField("__ord", IntegerType, nullable = false)))
-        val domain = spark.createDataFrame(
-          spark.sparkContext.parallelize(norm.zipWithIndex.map {
-            case (p, i) => org.apache.spark.sql.Row(p, i)
-          }, 1), schema)
-        // values outside the partition list -> null bucket (overflow)
+        val norm = parts.map(normalizeTo(dt, _)).toIndexedSeq
+        // values outside the partition list -> null key (overflow)
         val inSet = v.isin(parts.filter(_ != null): _*)
-        EdgePlan(when(inSet, v).otherwise(lit(null)).cast(schema.head.dataType),
-                 domain, maxCardinality = parts.size)
+        Edge(when(inSet, v).cast(dt), norm, norm, dt)
 
       case PredicateDomain(parts) =>
-        val bucket = parts.foldRight(lit(null).cast(StringType)) {
+        val key = parts.foldRight(lit(null).cast(StringType)) {
           case ((pname, where), acc) =>
             when(compiler.toBool(where), lit(pname)).otherwise(acc)
         }
-        val rows = parts.map(_._1).zipWithIndex
-        val domain = spark.createDataFrame(rows).toDF(name, "__ord")
-        EdgePlan(bucket, domain, maxCardinality = parts.size)
+        val names = parts.map(_._1).toIndexedSeq
+        Edge(key, names, names, StringType)
 
       case TimeDomain(minSpec, maxSpec, _, months) if months > 0 =>
         // calendar-aware buckets: month arithmetic, DATE-typed edges
-        val v = compiler.compile(edge.value.get)
-        val minDate = java.time.Instant
-          .ofEpochMilli(RelDate.parseMillis(minSpec))
+        val v = value
+        def utcDate(spec: String) = java.time.Instant
+          .ofEpochMilli(RelDate.parseMillis(spec))
           .atZone(java.time.ZoneOffset.UTC).toLocalDate
-        val maxDate = java.time.Instant
-          .ofEpochMilli(RelDate.parseMillis(maxSpec))
-          .atZone(java.time.ZoneOffset.UTC).toLocalDate
+        val (minDate, maxDate) = (utcDate(minSpec), utcDate(maxSpec))
         val totalMonths = java.time.temporal.ChronoUnit.MONTHS
           .between(minDate, maxDate)
         val n = math.ceil(totalMonths.toDouble / months).toInt
-        val minLit = lit(java.sql.Date.valueOf(minDate))
-        val idx = floor(months_between(v, minLit) / months)
+        val idx = floor(months_between(v,
+          lit(java.sql.Date.valueOf(minDate))) / months)
         val inRange =
           v >= lit(java.sql.Timestamp.valueOf(minDate.atStartOfDay)) &&
             v < lit(java.sql.Timestamp.valueOf(maxDate.atStartOfDay))
-        val bucket = when(inRange,
-          add_months(minLit, (idx * months).cast(IntegerType)))
-          .otherwise(lit(null))
-        val domain = spark.range(n.toLong).toDF("__ord")
-          .select(add_months(minLit,
-                    (col("__ord") * months).cast(IntegerType)).as(name),
-                  col("__ord").cast(IntegerType).as("__ord"))
-        EdgePlan(bucket, domain, maxCardinality = n)
+        ordinals(when(inRange, idx), n, DateType)(i =>
+          java.sql.Date.valueOf(minDate.plusMonths(i.toLong * months)))
 
       case TimeDomain(minSpec, maxSpec, intervalSec, _) =>
-        val v = compiler.compile(edge.value.get)
         val minMs = RelDate.parseMillis(minSpec)
         val maxMs = RelDate.parseMillis(maxSpec)
-        val stepMs = intervalSec * 1000L
-        val n = math.ceil((maxMs - minMs).toDouble / stepMs).toInt
-        val sec = unix_timestamp(v) // seconds
+        val n = math.ceil((maxMs - minMs).toDouble / (intervalSec * 1000L))
+          .toInt
+        val sec = unix_timestamp(value) // seconds
         val minSec = minMs / 1000L
-        val bucketSec = (floor((sec - lit(minSec)) / lit(intervalSec)) *
-          lit(intervalSec)) + lit(minSec)
         val inRange = sec >= lit(minSec) && sec < lit(maxMs / 1000L)
-        val bucket = when(inRange, timestamp_seconds(bucketSec))
-          .otherwise(lit(null))
-        val domain = spark.range(n.toLong).toDF("__ord")
-          .select(timestamp_seconds(col("__ord") * intervalSec + minSec)
-                    .as(name),
-                  col("__ord").cast(IntegerType).as("__ord"))
-        EdgePlan(bucket, domain, maxCardinality = n)
+        ordinals(when(inRange,
+            floor((sec - lit(minSec)) / lit(intervalSec))), n,
+          TimestampType)(i =>
+          new java.sql.Timestamp((i * intervalSec + minSec) * 1000L))
 
       case RangeDomain(minV, maxV, interval) =>
-        numericRange(spark, name, compiler.compile(edge.value.get),
-          minV, maxV, interval)
+        numericRange(value, minV, maxV, interval)
 
       case DurationDomain(minSec, maxSec, intervalSec) =>
         // durations are plain seconds — the named domain shares the
         // RangeDomain bucket arithmetic (reference DurationDomain keys
         // are durations; ours are their second counts)
-        numericRange(spark, name, compiler.compile(edge.value.get),
-          minSec, maxSec, intervalSec)
+        numericRange(value, minSec, maxSec, intervalSec)
 
       case DefaultDomain(limit) =>
-        // two-pass, fully distributed: top-k most frequent values become
-        // the domain; everything else -> null (overflow partition when
-        // allowNulls). Order: frequency desc, then value, for determinism.
-        val v = compiler.compile(edge.value.get)
-        val freq = df.select(v.as(name)).where(col(name).isNotNull)
+        // the top-k most frequent values become the domain (≤ limit
+        // rows collected); everything else -> null key (the overflow
+        // partition when allowNulls, dropped otherwise). Order:
+        // frequency desc, then value, for determinism.
+        val v = value
+        val topK = df.select(v.as(name)).where(col(name).isNotNull)
           .groupBy(name).count()
           .orderBy(col("count").desc, col(name))
           .limit(limit)
-        // materialize the (≤ limit rows) top-k once: the domain frame
-        // has THREE consumers (membership join, domain cross-join, and
-        // the guard's count when the static bound trips) and each
-        // would otherwise re-run the full fact aggregation — at 100 TB
-        // that is two extra corpus scans per DefaultDomain edge
-        val domain = freq.select(
-          col(name),
-          (row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("count").desc, col(name))) - 1).as("__ord"))
-          .localCheckpoint()
-        // bucket = raw value; non-top-k values are nullified into the
-        // overflow partition by the membership join in denseCube (JX
-        // DefaultDomain lumps the remainder into the null part when
-        // allowNulls; otherwise the dense join drops it).
-        EdgePlan(v, domain, membershipFromDomain = true,
-                 maxCardinality = limit)
+        val top = topK.collect().map(_.get(0)).toIndexedSeq
+        Edge(when(v.isin(top: _*), v), top, top, topK.schema.head.dataType)
     }
   }
 
+  /** An arithmetic domain of `n` buckets keyed by ordinal; `value`
+    * gives bucket i's output value. */
+  private def ordinals(idx: Column, n: Int, dt: DataType)(
+      value: Int => Any): Edge =
+    Edge(idx.cast(IntegerType), 0 until n, (0 until n).map(value), dt)
+
   /** Dense numeric buckets [min, max) step interval — RangeDomain and
-    * DurationDomain share this shape. */
-  private def numericRange(spark: SparkSession, name: String, value: Column,
-                           minV: Double, maxV: Double, interval: Double)
-      : EdgePlan = {
+    * DurationDomain share this shape. Bucket i's value is
+    * i * interval + min. */
+  private def numericRange(value: Column, minV: Double, maxV: Double,
+                           interval: Double): Edge = {
     val v = value.cast(DoubleType)
     val n = math.ceil((maxV - minV) / interval).toInt
-    val bucketExpr = floor((v - lit(minV)) / lit(interval)) *
-      lit(interval) + lit(minV)
     val inRange = v >= lit(minV) && v < lit(maxV)
-    val bucket = when(inRange, bucketExpr).otherwise(lit(null))
-    val domain = spark.range(n.toLong).toDF("__ord")
-      .select((col("__ord") * interval + minV).cast(DoubleType).as(name),
-              col("__ord").cast(IntegerType).as("__ord"))
-    EdgePlan(bucket, domain, maxCardinality = n)
+    ordinals(when(inRange, floor((v - lit(minV)) / lit(interval))), n,
+      DoubleType)(i => i * interval + minV)
   }
 
   private def sparkTypeOfValue(parts: Seq[Any]): DataType = {
@@ -186,100 +147,78 @@ object Domains {
     case _                              => v
   }
 
-  /** Execute the full edges pipeline: bucket -> sparse agg -> dense join.
-    * Output columns: edge names (in order) then aggregate columns, rows
-    * ordered by domain order. */
   /** One aggregate output of a query: name, aggregate column, JX
     * aggregate keyword, and the optional fill-in default. */
   final case class AggSpec(name: String, col: Column, aggregate: String,
                            default: Option[Any])
 
+  /** Execute the full edges pipeline: domains -> guard -> sparse agg ->
+    * densify on the driver. Output columns: edge names (in order) then
+    * aggregate columns; rows in domain order (first edge outermost),
+    * the overflow null last on each allowNulls edge. */
   def denseCube(spark: SparkSession, df: DataFrame, edges: Seq[EdgeClause],
                 aggs: Seq[AggSpec],
                 compiler: ExprCompiler): DataFrame = {
-    val plans = edges.map(e => plan(spark, df, e, compiler))
+    val planned = edges.map(e => (e, plan(df, e, compiler)))
     val names = edges.map(_.name)
+    // each edge's output axis: its domain, then the overflow null
+    val axes = planned.map { case (e, p) =>
+      if (e.allowNulls) p.values :+ null else p.values }
 
-    val bucketed0 = edges.zip(plans).foldLeft(df) { case (d, (e, p)) =>
-      d.withColumn(s"__bucket_${e.name}", p.bucket)
-    }
-    // data-driven domains (DefaultDomain): nullify non-member buckets so
-    // the remainder lands in the overflow partition — a broadcast join
-    // against the (tiny, top-k) domain, no extra shuffle of the fact
-    val bucketed = edges.zip(plans).foldLeft(bucketed0) {
-      case (d, (e, p)) if p.membershipFromDomain =>
-        val mem = s"__member_${e.name}"
-        d.join(broadcast(p.domain.select(col(e.name).as(mem))),
-            col(s"__bucket_${e.name}") === col(mem), "left")
-          .withColumn(s"__bucket_${e.name}",
-            when(col(mem).isNotNull, col(s"__bucket_${e.name}")))
-          .drop(mem)
-      case (d, _) => d
-    }
-    val sparse = bucketed
+    // Dense-cube driver guard (r11 verdict ask #1): the sparse cells are
+    // collected here and the dense result by Service.render /
+    // Formats.toCube, and edges queries are exempt from the service
+    // default limit, so the domain-cardinality PRODUCT is the only bound
+    // on driver memory. The domains are exact by now, so the product is
+    // too; above `spark.graft.cube.maxCells` the query fails loudly (the
+    // Formats.toCube:53 precedent) before the fact aggregate runs.
+    val capCells = spark.conf.getOption("spark.graft.cube.maxCells")
+      .map(_.toLong).getOrElse(100000L)
+    val cells = axes.map(a => BigInt(a.size)).product
+    if (cells > capCells || !cells.isValidInt)
+      throw new IllegalArgumentException(
+        s"dense cube would materialize $cells cells " +
+          s"(domain cardinality product over ${names.mkString(", ")}), " +
+          s"above spark.graft.cube.maxCells=$capCells — narrow the edge " +
+          "domains (smaller default-domain limits, coarser ranges) or " +
+          "raise the cap")
+
+    val sparse = planned
+      .foldLeft(df) { case (d, (e, p)) =>
+        d.withColumn(s"__bucket_${e.name}", p.key) }
       .groupBy(names.map(n => col(s"__bucket_$n")).toIndexedSeq: _*)
       .agg(aggs.head.col.as(aggs.head.name),
            aggs.tail.map(a => a.col.as(a.name)).toIndexedSeq: _*)
+    // empty cells carry null aggregates (the defaults below fill them)
+    val aggFields = sparse.schema.fields.drop(edges.size)
+      .map(_.copy(nullable = true))
 
-    // cross-join the (tiny) domains; each keeps its __ord as __ord_<name>
-    val domainAll = plans.zip(names).map { case (p, n) =>
-      val d = p.domain.withColumnRenamed("__ord", s"__ord_$n")
-      val withNull =
-        if (edges.find(_.name == n).get.allowNulls)
-          d.unionByName(
-            d.sparkSession.createDataFrame(
-              d.sparkSession.sparkContext.parallelize(
-                Seq(org.apache.spark.sql.Row(null, Int.MaxValue)), 1),
-              StructType(Seq(
-                StructField(n, d.schema.head.dataType, nullable = true),
-                StructField(s"__ord_$n", IntegerType, nullable = false)))))
-        else d
-      withNull
-    }.reduce(_.crossJoin(_))
-
-    // Dense-cube driver guard (r11 verdict ask #1): the dense result is
-    // collected by Service.render/Formats.toCube and edges queries are
-    // exempt from the service default limit, so the domain-cardinality
-    // PRODUCT is the only bound on driver memory. Static per-edge upper
-    // bounds (|partitions|, range steps, DefaultDomain's top-k limit,
-    // +1 for the allowNulls overflow row) are free to check; only when
-    // their product crosses the broadcast threshold do we pay a count()
-    // of each (tiny) domain to get the true product — a DefaultDomain
-    // bound is its limit, but the real domain may be far smaller.
-    // Above `spark.graft.cube.maxCells` the query fails loudly (the
-    // Formats.toCube:53 precedent); between the broadcast threshold and
-    // the cap, the dense join runs as a shuffle join instead of the
-    // unconditional broadcast(sparse).
-    val capCells = spark.conf.getOption("spark.graft.cube.maxCells")
-      .map(_.toLong).getOrElse(100000L)
-    val bcastCells = spark.conf.getOption("spark.graft.cube.broadcastCells")
-      .map(_.toLong).getOrElse(32768L)
-    def cellProduct(size: (EdgeClause, EdgePlan) => BigInt): BigInt =
-      edges.zip(plans).map { case (e, p) =>
-        size(e, p) + (if (e.allowNulls) 1 else 0) }.product
-    val staticBound = cellProduct((_, p) => BigInt(p.maxCardinality))
-    val cells =
-      if (staticBound <= bcastCells) staticBound
-      else cellProduct((_, p) => BigInt(p.domain.count()))
-    if (cells > capCells) throw new IllegalArgumentException(
-      s"dense cube would materialize $cells cells " +
-        s"(domain cardinality product over ${names.mkString(", ")}), " +
-        s"above spark.graft.cube.maxCells=$capCells — narrow the edge " +
-        "domains (smaller default-domain limits, coarser ranges) or " +
-        "raise the cap")
-    val joinCond = names.map(n => domainAll(n) <=> sparse(s"__bucket_$n"))
-      .reduce(_ && _)
-    // the hashed (right) side is the POST-AGGREGATION sparse cube, whose
-    // row count is bounded by `cells` — broadcast below the threshold,
-    // shuffle join above it (the dense join then adds one exchange of
-    // the sparse side, never of the fact).
-    // the merge hint (not just dropping broadcast()) is required:
-    // Catalyst's size ESTIMATE for the sparse side is a few KB per
-    // column and would auto-broadcast a 10^5-row sparse cube anyway
-    val dense =
-      if (cells <= bcastCells)
-        domainAll.join(broadcast(sparse), joinCond, "left")
-      else domainAll.join(sparse.hint("merge"), joinCond, "left")
+    // place each sparse row at its dense cell: row-major over the axes
+    // (last edge fastest); the null key takes the overflow slot, which
+    // exists only on an allowNulls edge
+    val slotOf = planned.map { case (e, p) =>
+      val index = p.keys.zipWithIndex.toMap
+      (k: Any) =>
+        if (k != null) index.get(k)
+        else if (e.allowNulls) Some(p.keys.size)
+        else None
+    }
+    val filled = new Array[Row](cells.toInt)
+    sparse.collect().foreach { r =>
+      edges.indices.foldLeft(Option(0)) { (cell, i) =>
+        for (c <- cell; s <- slotOf(i)(r.get(i))) yield c * axes(i).size + s
+      }.foreach(filled(_) = r)
+    }
+    val noAggs = Seq.fill[Any](aggFields.length)(null)
+    val combos = axes.foldLeft(Seq(Seq.empty[Any])) { (acc, axis) =>
+      for (c <- acc; v <- axis) yield c :+ v }
+    val rows = combos.zipWithIndex.map { case (vs, c) =>
+      Row.fromSeq(vs ++ Option(filled(c)).fold(noAggs)(
+        _.toSeq.drop(edges.size)))
+    }
+    val schema = StructType(planned.map { case (e, p) =>
+      StructField(e.name, p.dataType, nullable = true) } ++ aggFields)
+    val dense = spark.createDataFrame(rows.asJava, schema)
 
     val aggCols = aggs.map { a =>
       a.default match {
@@ -290,8 +229,6 @@ object Domains {
         case None => col(a.name)
       }
     }
-    dense
-      .orderBy(names.map(n => col(s"__ord_$n").asc).toIndexedSeq: _*)
-      .select((names.map(col) ++ aggCols).toIndexedSeq: _*)
+    dense.select((names.map(col) ++ aggCols).toIndexedSeq: _*)
   }
 }

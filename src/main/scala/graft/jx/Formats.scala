@@ -16,9 +16,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   *    order) — which is exactly what the Runner produces for `edges`
   *    queries.
   *
-  * Only the (small, already-aggregated) RESULT is collected — the cube
-  * shape is bounded by the product of domain cardinalities, never by the
-  * fact table, so this is driver-safe at any scale.
+  * Only the (small, already-aggregated) RESULT is collected: an edges
+  * result is bounded by the product of its domain cardinalities, which
+  * [[Domains.denseCube]] checks against `spark.graft.cube.maxCells`
+  * before its fact aggregate runs — never by the fact table.
   */
 object Formats {
 

@@ -10,8 +10,10 @@ import graft.tables.Catalog
   * `ListContainer.query` pipeline (public repo
   * `vendor/jx_python/containers/list_usingPythonList.py`; SURVEY.md §3.2).
   * Catalyst then does predicate pushdown / column pruning / partial-final
-  * aggregation on the resulting plan (SURVEY.md §4) — nothing here collects
-  * to the driver, so the same plan shape runs unchanged on a cluster.
+  * aggregation on the resulting plan (SURVEY.md §4). The one driver-side
+  * step is an `edges` query's densification ([[Domains.denseCube]]), which
+  * collects only post-aggregation cells, bounded by a cap checked before
+  * the fact aggregate runs.
   */
 final class Runner(spark: SparkSession, catalog: Catalog) {
 

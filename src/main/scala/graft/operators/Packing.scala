@@ -37,10 +37,12 @@ object Packing {
     * column — one distributed aggregate, a 255-long bounded scalar
     * pull. Exposed for the balance law in PackingSpec. */
   private[graft] def rankCuts(base: DataFrame): Seq[Long] =
-    base.agg(percentile_approx(col("doc_id"),
-        lit((1 to 255).map(_ / 256.0).toArray),
-        lit(10000)).as("cuts"))
-      .collect()(0).getSeq[Long](0)
+    base.agg(cutsOf(col("doc_id")).as("cuts")).collect()(0).getSeq[Long](0)
+
+  /** The 255 interior percentile_approx cuts of `id` — the one recipe
+    * shared by [[rankCuts]] and the [[spans]] probe. */
+  private def cutsOf(id: Column): Column =
+    percentile_approx(id, lit((1 to 255).map(_ / 256.0).toArray), lit(10000))
 
   /** (doc_id, n_tok, s, e): absolute token span per doc in pinned
     * doc_id order, starting at `baseOffset`. Zero-token docs are
@@ -54,9 +56,7 @@ object Packing {
     // (they were two sequential driver round-trips; every spans
     // consumer pays this once per call)
     val probe = base0.agg(max(col("doc_id")).as("__mx"),
-        percentile_approx(col("doc_id"),
-          lit((1 to 255).map(_ / 256.0).toArray),
-          lit(10000)).as("__cuts"))
+        cutsOf(col("doc_id")).as("__cuts"))
       .collect()(0)
     if (probe.isNullAt(0))
       return base0.select(col("doc_id"), col("n_tok"),

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -12,4 +13,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+  /** Block until every posted listener event has been delivered
+    * (`LiveListenerBus` is `private[spark]`): read listener counts only
+    * after this, so they do not depend on delivery timing. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -256,47 +256,64 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("dense-cube guard: a product between the broadcast threshold " +
-      "and the cap plans a NON-broadcast dense join and stays dense") {
+  /** 250 x 250 = 62,500 set cells, under maxCells (100,000), over a
+    * frame holding each (a, b) pair once. */
+  private def setCube250(): DataFrame = {
     import org.apache.spark.sql.functions._
-    // 250 x 250 = 62,500 cells: above the default broadcastCells
-    // (32,768), under maxCells (100,000) — the sparse side must not
-    // be broadcast, and the result must still be the full dense cube
     val wide = spark.range(62500L).select(
       (col("id") % 250).as("a"), expr("id div 250").as("b"))
     val parts = (0 until 250).mkString("[", ",", "]")
-    val q = graft.jx.QueryParser.parse(
+    graft.jx.Runner.runOn(wide, graft.jx.QueryParser.parse(
       s"""{"from": "w",
            "edges": [
              {"name": "a", "value": "a",
               "domain": {"type": "set", "partitions": $parts}},
              {"name": "b", "value": "b",
               "domain": {"type": "set", "partitions": $parts}}],
-           "select": [{"name": "n", "aggregate": "count"}]}""")
-    val df = graft.jx.Runner.runOn(wide, q)
+           "select": [{"name": "n", "aggregate": "count"}]}"""))
+  }
+
+  test("dense-cube guard: a product between the broadcast threshold " +
+      "and the cap plans a NON-broadcast dense join and stays dense") {
+    // the dense cube is assembled on the driver from the collected
+    // sparse cells, so no broadcast join appears and the result is the
+    // full cube
+    val df = setCube250()
     assert(!df.queryExecution.executedPlan.toString
       .contains("BroadcastHashJoin"),
-      "above spark.graft.cube.broadcastCells the dense join must " +
-        "shuffle the sparse side, not broadcast it")
+      "the dense cube must not broadcast the sparse side")
     assert(df.count() === 62500L)
   }
 
-  test("q358 wide cube: the 37.5k-cell dense join is non-broadcast " +
-      "end to end (SortMergeJoin on the null-safe keys)") {
-    val p = plan("q358_wide_cube")
-    assert(p.contains("SortMergeJoin"),
-      "the merge-hinted dense join must survive to the physical plan")
-    assert(!p.contains("BroadcastHashJoin"),
-      "a 37.5k-cell sparse side must not be broadcast")
+  test("wide cubes densify on the driver: dense, correct, no join") {
+    import org.apache.spark.sql.functions._
+    // q358: 37,500 range cells over l_orderkey, most of them empty
+    val q358 = SparkEntry.queries("q358_wide_cube")(spark, TestSpark.sfDir)
+    assert(!q358.queryExecution.executedPlan.toString.contains("Join"))
+    val li = catalog.table("lineitem")
+      .filter(col("l_orderkey") >= 0 && col("l_orderkey") < 600000)
+    val cells = q358.collect()
+    assert(cells.length === 37500)
+    assert(cells.map(_.getDouble(0)).toSeq === (0 until 37500).map(_ * 16.0),
+      "cells in domain order")
+    assert(cells.map(_.getLong(1)).sum === li.count())
+    assert(cells.count(_.getLong(1) > 0) ===
+      li.select(floor(col("l_orderkey") / 16)).distinct().count())
+    // the 62,500-cell set cube: every (a, b) cell once, in domain order
+    val df = setCube250()
+    assert(!df.queryExecution.executedPlan.toString.contains("Join"))
+    val dense = df.collect()
+    assert(dense.length === 62500)
+    assert(dense.forall(_.getLong(2) == 1L))
+    assert(dense.map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      (for (a <- 0L until 250L; b <- 0L until 250L) yield (a, b)))
   }
 
-  test("dense-cube guard refinement: DefaultDomain static bounds " +
-      "that trip the threshold are refined by counting the ACTUAL " +
-      "domains — a small cube over low-cardinality keys still runs " +
-      "and still broadcasts") {
+  test("2 x DefaultDomain(1000) over 6 x 4 keys: 24 cells, no join") {
     import org.apache.spark.sql.functions._
-    // two implicit DefaultDomain(1000) edges: static bound ~10^6
-    // (over both thresholds), actual domains 6 x 4 = 24 cells
+    // two implicit DefaultDomain(1000) edges: static bound ~10^6 (over
+    // the cap), actual domains 6 x 4 = 24 cells — the guard checks the
+    // exact product of the collected domains
     val wide = spark.range(6000L).select(
       pmod(col("id"), lit(6L)).as("a"), pmod(col("id"), lit(4L)).as("b"))
     val q = graft.jx.QueryParser.parse(
@@ -305,10 +322,38 @@ class PlanShapeSpec extends SparkSpec {
                     {"name": "b", "value": "b"}],
           "select": [{"name": "n", "aggregate": "count"}]}""")
     val df = graft.jx.Runner.runOn(wide, q)
-    assert(df.count() === 24L,
-      "the refined product is under both thresholds — dense 6x4 cube")
-    assert(df.queryExecution.executedPlan.toString
-      .contains("BroadcastHashJoin"),
-      "a 24-cell sparse side must still broadcast after refinement")
+    assert(!df.queryExecution.executedPlan.toString.contains("Join"))
+    val cells = df.collect()
+    assert(cells.length === 24)
+    assert(cells.map(_.getLong(2)).sum === 6000L)
+  }
+
+  test("a set-domain cube through Service.query runs exactly 2 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val json =
+      """{"from": "orders",
+          "edges": [{"name": "st", "value": "o_orderstatus",
+                     "domain": {"type": "set",
+                                "partitions": ["F", "O", "P", "X"]}}],
+          "select": [{"name": "n", "aggregate": "count"},
+                     {"name": "s", "value": "o_totalprice",
+                      "aggregate": "sum"}],
+          "format": "cube"}"""
+    Service.query(spark, TestSpark.sfDir, json) // warm table resolution
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
+    sc.addSparkListener(counter)
+    try {
+      Service.query(spark, TestSpark.sfDir, json)
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get === 2,
+      "one sparse aggregate (shuffle map + result job); the domain, the " +
+        "densification and the cube render add none")
   }
 }
