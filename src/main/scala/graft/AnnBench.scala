@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.Similarity
+import graft.LocalSpark.timed
 
 /** ANN recall/latency curve at a synthesized N× corpus — the numbers
   * behind the "scale path" claims: brute force is the exact baseline
@@ -10,7 +11,7 @@ import graft.llm.Similarity
   * recall@k and wall time are measured at one order of magnitude
   * beyond the fixtures.
   *
-  *   sbt "runMain graft.AnnBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.AnnBench <testdata>/sf0.1 10"
   *
   * The N× corpus is DETERMINISTIC (no RNG): copy c of vector v shifts
   * the id by c·10M and perturbs every dimension by a hash-derived
@@ -25,15 +26,7 @@ object AnnBench {
     val mult = if (args.length > 1) args(1).toInt else 10
     val refine = if (args.length > 2) args(2).toInt else 64
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val base = new graft.tables.Catalog(spark, sfDir).table("embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -45,10 +38,10 @@ object AnnBench {
           (pmod(xxhash64(col("vec_id"), i, lit(c)), lit(1000))
             .cast("double") / 1000.0 - 0.5) * 0.1).as("v"))
     }
-    // materialize corpus + queries so every method is timed on the
+    // materialize corpus + queries so every method is time on the
     // SEARCH, not on re-synthesizing its input
     val corpus = copies.reduce(_ unionByName _)
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(LocalSpark.cpus).localCheckpoint()
     val nCorpus = corpus.count()
     // orderBy before limit: a bare limit takes whatever rows the scan
     // yields first, so the benchmarked query set would depend on file
@@ -59,11 +52,6 @@ object AnnBench {
       .localCheckpoint()
     val nQ = queries.count()
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select(col("query_id"), col("vec_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -71,7 +59,7 @@ object AnnBench {
     // warm the scan/codegen paths once so method 1 isn't charged setup
     corpus.agg(count(lit(1))).collect()
 
-    val (truth, tBrute) = time(pairs(Similarity.bruteForceTopK(
+    val (truth, tBrute) = timed(pairs(Similarity.bruteForceTopK(
       corpus, col("vec_id"), col("v"),
       queries, col("query_id"), col("qv"), k)))
     val methods = Seq(
@@ -108,7 +96,7 @@ object AnnBench {
     println(f"${"method"}%-6s ${"recall@10"}%9s ${"sec"}%8s")
     println(f"${"brute"}%-6s ${1.0}%9.3f $tBrute%8.2f")
     val rows = methods.map { case (name, fn) =>
-      val (found, t) = time(pairs(fn()))
+      val (found, t) = timed(pairs(fn()))
       val recall = found.count(truth).toDouble / truth.size
       println(f"$name%-6s $recall%9.3f $t%8.2f")
       (name, recall, t)

@@ -3,22 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // JX: errors -> null, never throw
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the codegen class cache defaults to 100 entries; a 357-query
-      // interleaved sweep evicts all of them between a query's two
-      // iterations, so every iteration re-pays janino compilation
-      // (~0.2 s/query — measured +25% on the total vs back-to-back).
-      // Size it for the suite, as a 357-query production service would.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     // JVM/codegen warmup so the first measured query doesn't absorb
     // session bring-up (measured costs are query costs only): exercise
     // the scan + hash-agg + sort codegen paths once, generically
@@ -46,19 +31,6 @@ object Bench {
     // artifact is published.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     val reruns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUNS", "1").toInt
-    def cleanup(): Unit = {
-      // drop persisted intermediates (outside the timed section) so
-      // cached blocks don't accumulate memory pressure across queries;
-      // likewise the streaming queries' memory-sink temp views, which
-      // clearCache does NOT release
-      spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      // the timed count() has consumed the result, so scratch dirs
-      // persisted by the query are safe to delete (outside the timer)
-      Scratch.sweep()
-    }
     // optional smoke-subset: comma-separated query-name prefixes
     // (mirrors Verify's third arg); unset = the full suite
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -144,7 +116,8 @@ object Bench {
       val sb = (graft.operators.Staged.buildNanos - s0) / 1e9
       times(name) = times.getOrElse(name, Vector.empty) :+ dt
       if (sb > stagedWall.getOrElse(name, 0.0)) stagedWall(name) = sb
-      cleanup()
+      // outside the timer: the timed count() has consumed the result
+      LocalSpark.release(spark)
     }
     for (_ <- 1 to iters; (name, fn) <- qseq) runOnce(name, fn)
     for (_ <- 1 to reruns; (name, fn) <- qseq) {

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llm.Bloom
+import graft.LocalSpark.timed
 
 /** Shuffle-volume measurement for the Bloom-prefiltered large-large
   * joins (q116/q117): at an N× synthesized corpus, how many big-side
@@ -13,7 +13,7 @@ import graft.llm.Bloom
   * no broadcast escape hatch; the sketch is the only thing small
   * enough to ship).
   *
-  *   sbt "runMain graft.BloomBench /root/testdata/sf0.1 10 100"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.BloomBench <testdata>/sf0.1 10 100"
   *
   * args: sfDir, corpus multiplier, overlapMod (1 in `overlapMod` big
   * docs overlap the other corpus — decontamination-shaped overlap is
@@ -24,15 +24,7 @@ object BloomBench {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 10
     val overlapMod = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val base = new graft.tables.Catalog(spark, sfDir).table("documents")
       .select(col("doc_id"), col("text"))
@@ -43,7 +35,7 @@ object BloomBench {
     }
     val big = copies.reduce(_ unionByName _)
       .select(col("doc_id"), md5(col("text")).as("fp"))
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(LocalSpark.cpus).localCheckpoint()
     val bigRows = big.count()
     // the other corpus: the 1-in-overlapMod overlapping slice verbatim,
     // plus an equal volume of non-overlapping (modified) fingerprints
@@ -54,23 +46,17 @@ object BloomBench {
       .localCheckpoint()
     val otherRows = other.count()
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     // sketch build (charged separately — it is the prefilter's ingest)
-    val (bf, tSketch) = time(Bloom.sketchBytes(other, col("fp"),
+    val (bf, tSketch) = timed(Bloom.sketchBytes(other, col("fp"),
       expectedItems = math.max(otherRows, 1L), fpp = 0.01))
-    val (survivors, tProbe) = time(
+    val (survivors, tProbe) = timed(
       big.filter(Bloom.mightContain(bf, col("fp"))).count())
 
     // measured joins: no broadcast escape hatch
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (nPlain, tPlain) = time(
+    val (nPlain, tPlain) = timed(
       big.join(other.distinct(), Seq("fp"), "left_semi").count())
-    val (nBloom, tBloom) = time(Bloom.prefilteredSemiJoin(
+    val (nBloom, tBloom) = timed(Bloom.prefilteredSemiJoin(
       big, col("fp"), other, col("fp"),
       expectedItems = math.max(otherRows, 1L)).count())
     require(nPlain == nBloom,

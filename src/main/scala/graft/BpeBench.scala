@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.LocalSpark.timed
 
 /** BPE training driver-round curve: trains the same vocabulary
   * sequentially (batchSize 1) and batched, asserts the merge tables
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * size" (a 30-50k-rule production vocabulary is infeasible at one
   * Spark job per merge).
   *
-  *   sbt "runMain graft.BpeBench /root/testdata/sf0.1 48 8"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.BpeBench <testdata>/sf0.1 48 8"
   *
   * ENCODE-CURVE mode (4th arg = corpus multiplier, 5th optional
   * "encode" flag forced when numMerges > 64): trains batched ONLY
@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * plan's constants hold when BOTH the rule count and the vocab
   * table grow?
   *
-  *   sbt "runMain graft.BpeBench /root/testdata/sf0.1 1000 64 1"
-  *   sbt "runMain graft.BpeBench /root/testdata/sf0.1 1000 64 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.BpeBench <testdata>/sf0.1 1000 64 1"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.BpeBench <testdata>/sf0.1 1000 64 10"
   *
   * ZIPF mode (1st arg = "zipf"): the sf0.1 corpus has a 31-WORD
   * vocabulary, so pair exhaustion stops BPE at 89 accepted rules and
@@ -43,8 +43,8 @@ import org.apache.spark.sql.functions._
   * train (accepted rules + driver rounds), chunked vocab build,
   * broadcast encode.
   *
-  *   sbt "runMain graft.BpeBench zipf 1000 64 1"
-  *   sbt "runMain graft.BpeBench zipf 1000 64 1 10000"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.BpeBench zipf 1000 64 1"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.BpeBench zipf 1000 64 1 10000"
   */
 object BpeBench {
   def main(args: Array[String]): Unit = {
@@ -53,15 +53,7 @@ object BpeBench {
     val batch = if (args.length > 2) args(2).toInt else 8
     val mult = if (args.length > 3) args(3).toInt else 1
     val encodeMode = numMerges > 64 || args.length > 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val zipfMode = sfDir == "zipf"
     val vocabSize = if (args.length > 4) args(4).toInt else 10000
@@ -115,20 +107,14 @@ object BpeBench {
             split(col("text"), " "),
             x => concat(lit(s"c${c}x"), x)), " "))
       }.reduce(_ unionByName _))
-      .repartition(cpus.toInt)
+      .repartition(LocalSpark.cpus)
       .localCheckpoint()
     docs.count()
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     if (!encodeMode) {
-      val ((seqMerges, seqRounds), tSeq) = time(
+      val ((seqMerges, seqRounds), tSeq) = timed(
         graft.llm.Bpe.trainWithStats(spark, docs, col("text"), numMerges))
-      val ((batMerges, batRounds), tBat) = time(
+      val ((batMerges, batRounds), tBat) = timed(
         graft.llm.Bpe.trainWithStats(spark, docs, col("text"), numMerges,
           batchSize = batch))
       require(seqMerges == batMerges,
@@ -150,11 +136,11 @@ object BpeBench {
       // real rule counts: 1000 rules on a 10k-word natural vocab)
       val (localMerges, tLocal) =
         if (zipfMode) {
-          val (r, t) = time(graft.llm.Bpe.trainLocal(spark, docs,
+          val (r, t) = timed(graft.llm.Bpe.trainLocal(spark, docs,
             col("text"), numMerges))
           (Some(r), t)
         } else (None, 0.0)
-      val ((merges, rounds), tTrain) = time(
+      val ((merges, rounds), tTrain) = timed(
         graft.llm.Bpe.trainWithStats(spark, docs, col("text"),
           numMerges, batchSize = batch))
       localMerges.foreach { lm =>
@@ -164,14 +150,14 @@ object BpeBench {
         println(f"trainLocal=$tLocal%.2f s (1 distributed job) vs " +
           f"distributed batched=? s (rounds below) — tables identical")
       }
-      val (vocab, tVocab) = time {
+      val (vocab, tVocab) = timed {
         val v = graft.llm.Bpe.vocabLengths(spark, docs, col("text"),
           merges).localCheckpoint()
         v.count() // materialize: the build wall, not a lazy stub
         v
       }
       val vocabRows = vocab.count()
-      val (encTok, tEncode) = time {
+      val (encTok, tEncode) = timed {
         docs.select(col("doc_id"),
             explode(graft.llm.TextAnalysis.tokens(col("text")))
               .as("word"))

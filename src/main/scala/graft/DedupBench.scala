@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, TextAnalysis}
+import graft.LocalSpark.timed
 
 /** Near-dup dedup scale curve at a synthesized N× documents corpus —
   * the text-side companion of [[AnnBench]]: exact df-capped n-gram
@@ -11,7 +12,7 @@ import graft.llm.{Dedup, TextAnalysis}
   * beyond the fixtures, plus transitive clustering over the found
   * pairs.
   *
-  *   sbt "runMain graft.DedupBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.DedupBench <testdata>/sf0.1 10"
   *
   * The N× corpus is DETERMINISTIC: copy c of doc d shifts the id by
   * c·10M and truncates a hash-derived number of tail characters
@@ -28,15 +29,7 @@ object DedupBench {
     // space at high mult and the "exact" Jaccard would no longer
     // measure the same space LSH verifies in
     val maxDf = if (args.length > 2) args(2).toInt else 16 * mult
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val base = new graft.tables.Catalog(spark, sfDir).table("documents")
       .select(col("doc_id"), col("text"))
@@ -51,22 +44,17 @@ object DedupBench {
           lit(1))).as("text"))
     }
     val corpus = copies.reduce(_ unionByName _)
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(LocalSpark.cpus).localCheckpoint()
     val nDocs = corpus.count()
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select(col("id_a"), col("id_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
 
     // ONE staged shingle scan feeds both methods (the pipeline shape
-    // q95 uses); timed separately so methods are charged only their
+    // q95 uses); time separately so methods are charged only their
     // own joins
-    val (staged, tStage) = time {
+    val (staged, tStage) = timed {
       val s = corpus.select(col("doc_id").as("id"),
         TextAnalysis.shingleHashes(col("text"), 3).as("sh"))
         .localCheckpoint()
@@ -74,19 +62,19 @@ object DedupBench {
       s
     }
 
-    val (exact, tExact) = time(pairs(Dedup.ngramJaccardPairsFromShingles(
+    val (exact, tExact) = timed(pairs(Dedup.ngramJaccardPairsFromShingles(
       staged.select(col("id"), col("sh").as("s")),
       threshold = 0.5, maxDf = maxDf)))
     val lshDf = Dedup.minhashPairsFromShingles(
         staged, numHashes = 64, bands = 16, threshold = 0.5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (found, tLsh) = time(pairs(lshDf))
+    val (found, tLsh) = timed(pairs(lshDf))
     val recall = if (exact.isEmpty) 1.0
       else found.count(exact).toDouble / exact.size
 
     // transitive clustering over the (cached) LSH pairs — the
     // survivor-selection input; rounds are O(log diameter)
-    val (nClusters, tCc) = time {
+    val (nClusters, tCc) = timed {
       Dedup.connectedComponents(lshDf, col("id_a"), col("id_b"))
         .select(col("comp")).distinct().count()
     }
@@ -108,9 +96,9 @@ object DedupBench {
       val quad = hist.map(c => c._2.toDouble * c._2).sum / (n * n / k)
       (worst, quad)
     }
-    val (lowHist, tLow) = time(graft.llm.SemDedup.cellHistogram(
+    val (lowHist, tLow) = timed(graft.llm.SemDedup.cellHistogram(
       graft.llm.SemDedup.assign(vecs, col("doc_id"), col("v"), nlist = k)))
-    val (fitRes, tFit) = time {
+    val (fitRes, tFit) = timed {
       val m = graft.llm.KMeans.fit(vecs, col("doc_id"), col("v"),
         k = k, iters = 4)
       graft.llm.SemDedup.cellHistogram(
@@ -152,13 +140,13 @@ object DedupBench {
     val explodedB = clustered.select(col("vec_id").as("id"), col("v"))
       .withColumn("bucket", explode(
         graft.llm.Similarity.lshBuckets(col("v"), 4, 8)))
-    val (rawStats, tRawH) = time(bucketStats(explodedB))
-    val (capStats, tCapH) = time(bucketStats(
+    val (rawStats, tRawH) = timed(bucketStats(explodedB))
+    val (capStats, tCapH) = timed(bucketStats(
       graft.llm.SemDedup.splitOversizedKeys(explodedB, "bucket", "id",
         cap)))
-    val (rawPairs, tRawP) = time(pairs(Dedup.embeddingPairs(
+    val (rawPairs, tRawP) = timed(pairs(Dedup.embeddingPairs(
       clustered, col("vec_id"), col("v"), threshold = 0.99)))
-    val (capPairs, tCapP) = time(pairs(Dedup.embeddingPairs(
+    val (capPairs, tCapP) = timed(pairs(Dedup.embeddingPairs(
       clustered, col("vec_id"), col("v"), threshold = 0.99,
       bucketCap = Some(cap))))
     val guardRecall = if (rawPairs.isEmpty) 1.0
@@ -192,7 +180,7 @@ object DedupBench {
         .agg(sum(col("df") * (col("df") - 1) / 2).cast("long"),
           max(col("df")).cast("long"))
         .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-      val (nCand, t) = time(
+      val (nCand, t) = timed(
         Dedup.prefixFilterCandidates(shing, 0.5).count())
       (c.count(), bound, hot, nCand, t)
     }

@@ -1,37 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
+import graft.LocalSpark.timed
 
 /** PageRank cost decomposition at sf scale — where q141/q146's wall
   * time actually goes: the one-off co-occurrence edge build (distinct
   * self-join) vs the per-iteration loop, and the price of the
   * deterministic (sorted-fold) mode over the plain sum.
   *
-  *   sbt "runMain graft.GraphBench /root/testdata/sf0.1"
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.GraphBench <testdata>/sf0.1"
   */
 object GraphBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
+    val spark = LocalSpark.session()
     val li = new graft.tables.Catalog(spark, sfDir).table("lineitem")
       .filter(pmod(col("l_partkey"), lit(4)) === 0)
-    val (edges, tBuild) = time {
+    val (edges, tBuild) = timed {
       val e = Graph.coOccurrenceEdges(li, col("l_orderkey"),
           col("l_partkey"))
         .localCheckpoint()
@@ -40,14 +26,14 @@ object GraphBench {
     val nEdges = edges._2
     val nNodes = edges._1.select(col("src")).distinct().count()
 
-    val (_, tPlain) = time {
+    val (_, tPlain) = timed {
       Graph.pageRank(edges._1, iterations = 3).count()
     }
-    val (_, tDet) = time {
+    val (_, tDet) = timed {
       Graph.pageRank(edges._1, iterations = 3,
         deterministic = true).count()
     }
-    val (_, tDangling) = time {
+    val (_, tDangling) = timed {
       Graph.pageRank(edges._1, iterations = 3,
         danglingMass = true).count()
     }
@@ -69,11 +55,11 @@ object GraphBench {
     }.toDF("src", "dst")
     val skewed = star.unionByName(cliqueEdges).localCheckpoint()
     val expectTris = nClique * 4 * 3 // 4 triangles/clique × 3 corners
-    val (nTriOriented, tOriented) = time {
+    val (nTriOriented, tOriented) = timed {
       Graph.triangleCounts(skewed)
         .agg(sum(col("triangles"))).as[Long].head()
     }
-    val (nTriNaive, tNaive) = time {
+    val (nTriNaive, tNaive) = timed {
       Graph.triangleCountsNaive(skewed)
         .agg(sum(col("triangles"))).as[Long].head()
     }
@@ -81,13 +67,13 @@ object GraphBench {
       s"orientation changed the answer: $nTriOriented vs $nTriNaive")
 
     // --- PPR / BFS / link prediction on the same staged edge list ---
-    val (_, tPpr) = time {
+    val (_, tPpr) = timed {
       val seeds = edges._1.select(col("src").as("node"))
         .filter(col("node") % 100 === 0).distinct()
       Graph.pageRank(edges._1, iterations = 3,
         restart = Some(seeds)).count()
     }
-    val (nReach, tBfs) = time {
+    val (nReach, tBfs) = timed {
       val seeds = edges._1.select(col("src").as("node"))
         .filter(col("node") % 100 === 0).distinct()
       Graph.bfsHops(edges._1, seeds, maxHops = 3).count()
@@ -95,7 +81,7 @@ object GraphBench {
     // link prediction runs on the SKEWED graph to show the hub cap:
     // uncapped, the hub alone contributes H² ≈ 4·10⁸ wedges; capped,
     // only the cliques' bounded wedges remain
-    val (nCand, tLpCapped) = time {
+    val (nCand, tLpCapped) = timed {
       Graph.linkPrediction(skewed, topK = 100,
         maxWedgeDegree = Some(64L)).count()
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.jx.Runner
 import graft.tables.Catalog
 
@@ -14,16 +13,7 @@ import graft.tables.Catalog
 object JxMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JxMain <sfDir> <jx-query-json> [--plan]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     try {
       val json =
         if (args(1).startsWith("@"))

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llm.{LangModel, Pipelines}
+import graft.LocalSpark.timed
 
 /** N-gram LM scale curve at a synthesized N× documents corpus — the
   * language-model companion of [[DedupBench]]: measures train (count
@@ -15,7 +15,7 @@ import graft.llm.{LangModel, Pipelines}
   *  - the unigram side stays broadcastable (vocabulary growth is
   *    Heaps-law sublinear), so scoring joins never shuffle the corpus.
   *
-  *   sbt "runMain graft.LmBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.LmBench <testdata>/sf0.1 10"
   *
   * The N× corpus reuses [[DedupBench]]'s deterministic construction
   * (copy c shifts ids by c·10M and truncates a hash-derived tail), so
@@ -24,15 +24,7 @@ object LmBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val base = new graft.tables.Catalog(spark, sfDir).table("documents")
       .select(col("doc_id"), col("text"))
@@ -47,20 +39,14 @@ object LmBench {
           lit(1))).as("text"))
     }
     val corpus = copies.reduce(_ unionByName _)
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(LocalSpark.cpus).localCheckpoint()
     val nDocs = corpus.count()
     val train = corpus.filter(Pipelines.hashBucket(col("doc_id")) < 80)
     val test = corpus.filter(Pipelines.hashBucket(col("doc_id")) >= 90)
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     // TRAIN: materialize both count tables (checkpoint = the at-rest
     // model a production run would persist); sizes are the scale story
-    val ((uni, bi), tTrain) = time {
+    val ((uni, bi), tTrain) = timed {
       val u = LangModel.unigrams(train, col("text")).localCheckpoint()
       val b = LangModel.bigrams(train, col("text")).localCheckpoint()
       (u, b)
@@ -68,7 +54,7 @@ object LmBench {
     val nUni = uni.count()
     val nBi = bi.count()
     // SCORE: the held-out split against the materialized tables
-    val (nScored, tScore) = time {
+    val (nScored, tScore) = timed {
       LangModel.scoreDocs(test, col("doc_id"), col("text"),
         uni, bi, lambda = 0.5, k = 1.0).count()
     }

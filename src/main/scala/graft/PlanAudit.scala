@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * manual explains. The census is both a dev harness (this main) and
   * a permanent CI gate ([[graft.PlanAuditSpec]] asserts zero plan
   * errors / cartesians / global windows on every `sbt test`).
-  *   sbt "runMain graft.PlanAudit /root/testdata/sf0.01"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.PlanAudit <testdata>/sf0.01"
   */
 object PlanAudit {
 
@@ -44,15 +44,10 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
+    // the recorded census tables were taken at 8 shuffle partitions:
+    // pin it so a census reads the same at any core count
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     println(f"${"query"}%-26s ${tokens.map(_.take(9)).mkString(" ")} GLOBWIN")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       censusOne(spark, sfDir, name, fn) match {
@@ -62,10 +57,7 @@ object PlanAudit {
           println(f"$name%-26s ${c.counts.map(n => f"$n%9d").mkString(" ")} " +
             f"${c.globalWins}%7d")
       }
-      spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      LocalSpark.release(spark)
     }
     spark.stop()
   }

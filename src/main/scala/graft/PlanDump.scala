@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: write `.explain("formatted")` for named queries to
   * files — the before/after plan evidence the optimization rounds
   * commit under plans/.
-  *   sbt "runMain graft.PlanDump plans/r15 before q141_pagerank,q205_bfs_hops"
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PlanDump plans/r15 before q141_pagerank,q205_bfs_hops"
   * writes plans/r15/<name>_before.txt per query. Query names accept
   * prefixes (the Verify/Bench convention). Dataset actions the query
   * runs while it is built (driver collects, e.g. a JX cube's sparse
@@ -16,16 +15,7 @@ object PlanDump {
     val suffix = args(1)
     val prefixes = args(2).split(",").toSeq.filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     val eager = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -57,10 +47,7 @@ object PlanDump {
         val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
         java.nio.file.Files.writeString(p, txt)
         println(s"[plandump] wrote $p (${txt.length} chars)")
-        spark.catalog.clearCache()
-        spark.catalog.listTables().collect()
-          .filter(_.name.startsWith("graft_stream_"))
-          .foreach(t => spark.catalog.dropTempView(t.name))
+        LocalSpark.release(spark)
       }
     spark.stop()
   }

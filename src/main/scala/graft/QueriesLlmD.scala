@@ -262,13 +262,6 @@ private[graft] object QueriesLlmD {
     ChainSelection(stageRows, sel)
   }
 
-  /** [[trainingBuildChain]] exposed for the StreamBuildProfile dev
-    * harness (phase timing) — not a query surface. */
-  private[graft] def profileChain(kept0: DataFrame, corpusIds: DataFrame,
-                                  comps: DataFrame, contamIds: DataFrame,
-                                  docHash: DataFrame): DataFrame =
-    trainingBuildChain(kept0, corpusIds, comps, contamIds, docHash)
-
   private def trainingBuildChain(kept0: DataFrame,
                                  corpusIds: DataFrame,
                                  comps: DataFrame,

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Kmv
+import graft.LocalSpark.timed
 
 /** Rolling-distinct scale curve: the EXACT trailing-7-day WAU (q167's
   * grid range-join over every distinct (day,user) pair) vs the KMV
@@ -11,7 +12,7 @@ import graft.operators.Kmv
   * window cost grows with DISTINCT ACTIVES × 7, the sketch path's
   * with k × 7 per day regardless of population.
   *
-  *   sbt "runMain graft.RollBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.RollBench <testdata>/sf0.1 10"
   *
   * The N× population is deterministic: copy c of event e re-keys the
   * user by c·10M (same-day activity pattern preserved), so each
@@ -24,15 +25,7 @@ object RollBench {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 10
     val k = if (args.length > 2) args(2).toInt else 256
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val base = new graft.tables.Catalog(spark, sfDir).table("events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
@@ -40,13 +33,7 @@ object RollBench {
       if (c == 0) base
       else base.select(col("day"),
         (col("user_id") + lit(c * 10000000L)).as("user_id"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
-
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    }.reduce(_ unionByName _).repartition(LocalSpark.cpus).localCheckpoint()
 
     val grid = events.agg(min(col("day")).as("__lo"),
         max(col("day")).as("__hi"))
@@ -54,7 +41,7 @@ object RollBench {
         expr("interval 1 day"))).as("gday"))
 
     // exact path: distinct (day,user) × 7-day grid join
-    val (exact, tExact) = time {
+    val (exact, tExact) = timed {
       val du = events.distinct()
       broadcast(grid)
         .join(du, col("day").between(date_sub(col("gday"), 6),
@@ -72,7 +59,7 @@ object RollBench {
     // millions, and the k smallest are below the cut with
     // overwhelming probability (4× safety margin; a day whose
     // estimate undershoots merely ranks a few more rows).
-    val (est, tSketch) = time {
+    val (est, tSketch) = timed {
       // the distinct frame feeds BOTH the per-day estimate and the
       // cut — persist it or the lineage (scan+hash+distinct) runs
       // twice and the "optimization" doubles the wall

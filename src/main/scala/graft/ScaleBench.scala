@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-shape evidence for the TOP OF THE BENCH PROFILE: run the
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * accidentally-quadratic shape (AnnBench/DedupBench do this for
   * their domains; this covers the profile's head).
   *
-  *   sbt "runMain graft.ScaleBench /root/testdata/sf0.1 10"
-  *   sbt "runMain graft.ScaleBench /root/testdata/sf0.1 100 q147,q150"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.ScaleBench <testdata>/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.ScaleBench <testdata>/sf0.1 100 q147,q150"
   *
   * An optional third arg restricts to a prefix-matched subset of the
   * targets (the 100× runs focus on the candidate-pair generators;
@@ -176,16 +176,7 @@ object ScaleBench {
       else targets
     val needed: Set[String] =
       chosen.flatMap(n => reads.getOrElse(n, Set.empty[String])).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     // ---- synthesize the mult× dir (documents + lineitem: the only
     //      tables the targets read) ----
@@ -208,7 +199,7 @@ object ScaleBench {
             x => concat(lit(s"c${c}x"), x)), " "))
           .select(docCols.map(col): _*)
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(LocalSpark.cpus)
         .write.parquet(s"$big/documents.parquet")
     }
     if (needed("lineitem")) {
@@ -222,7 +213,7 @@ object ScaleBench {
           .withColumn("l_partkey", col("l_partkey") + lit(c * 100000L))
           .select(liCols.map(col): _*)
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(LocalSpark.cpus)
         .write.parquet(s"$big/lineitem.parquet")
     }
     // orders (q149's dangling-mass graph): shift BOTH keys by
@@ -239,7 +230,7 @@ object ScaleBench {
           .withColumn("o_custkey", col("o_custkey") + lit(c * 1000000L))
           .select(ordCols.map(col): _*)
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(LocalSpark.cpus)
         .write.parquet(s"$big/orders.parquet")
     }
     // events (manifest-family queries): event_id shifts by 1M (a
@@ -255,7 +246,7 @@ object ScaleBench {
           .withColumn("user_id", col("user_id") + lit(c * 100000L))
           .select(evtCols.map(col): _*)
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(LocalSpark.cpus)
         .write.parquet(s"$big/events.parquet")
     }
 
@@ -263,10 +254,9 @@ object ScaleBench {
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     def cleanup(): Unit = {
+      // LocalSpark.release, minus the synthesized input dir
       spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      graft.streaming.EventStream.dropSinkViews(spark)
       Scratch.sweepExcept(big)
       // every repeat pays the FULL build (see targets note)
       graft.operators.Staged.clear()

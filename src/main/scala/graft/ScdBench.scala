@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.Scd
+import graft.LocalSpark.timed
 
 /** SCD2 maintenance scale curve — merge-vs-rebuild at an N× event
   * log, the dimension-maintenance companion of [[LmBench]]: measures
@@ -11,7 +12,7 @@ import graft.operators.Scd
   * from parquet (log, dimension and batch each from their own files —
   * neither side gets a warm-cache advantage).
   *
-  *   sbt "runMain graft.ScdBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.ScdBench <testdata>/sf0.1 10"
   *
   * Two change-rate scenarios, because the merge-vs-rebuild economics
   * are entirely a function of run length:
@@ -31,23 +32,10 @@ object ScdBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val base = new graft.tables.Catalog(spark, sfDir).table("events")
       .select(col("user_id"), col("ts"), col("event_type"))
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val cut = lit("2024-01-30 00:00:00").cast("timestamp")
     val scenarios: Seq[(String, Column)] = Seq(
       ("fast", col("event_type")),
@@ -60,7 +48,7 @@ object ScdBench {
         else base.select((col("user_id") + lit(c * 10000000L))
           .as("user_id"), col("ts"), col("event_type"))
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt).write.parquet(root + "/log")
+        .repartition(LocalSpark.cpus).write.parquet(root + "/log")
       val log = spark.read.parquet(root + "/log")
       val nLog = log.count()
       log.filter(col("ts") >= cut).write.parquet(root + "/batch")
@@ -72,10 +60,10 @@ object ScdBench {
         Scd.buildType2(log.filter(col("ts") < cut), col("user_id"),
             col("ts"), attr)
           .write.parquet(dimPath)
-        val (nRebuild, tRebuild) = time {
+        val (nRebuild, tRebuild) = timed {
           Scd.buildType2(log, col("user_id"), col("ts"), attr).count()
         }
-        val (nMerge, tMerge) = time {
+        val (nMerge, tMerge) = timed {
           Scd.mergeType2(spark.read.parquet(dimPath), batch,
             col("user_id"), col("ts"), attr).count()
         }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the q351 contract with numbers: folding a FIXED fresh
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * ([[graft.llm.Dedup.spanRemovalCensus]] over history ∪ batch),
   * which IS O(history).
   *
-  *   sbt "runMain graft.SpanFoldBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.SpanFoldBench <testdata>/sf0.1 10"
   *
   * History synthesis: `m` token-renamed copies of documents (the
   * ScaleBench discipline — bijective renames keep within-copy span
@@ -23,16 +23,7 @@ object SpanFoldBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     val docs = new graft.tables.Catalog(spark, sfDir).table("documents")
       .select(col("doc_id"), col("text"))
@@ -60,10 +51,6 @@ object SpanFoldBench {
     val seed = Seq((800000000L, "span fold bench seed doc"))
       .toDF("doc_id", "text")
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
     val dedup = graft.llm.Dedup
     println(f"${"hist"}%-6s ${"fold"}%8s ${"rebuild"}%8s ratio")
     val rows = Seq(1, mult).map { m =>
@@ -72,11 +59,11 @@ object SpanFoldBench {
       // manifest build (untimed): one history pass, as in production
       dedup.spanRemovalIncremental(hist, seed,
         col("doc_id"), col("text"), idx, n = 20).rdd.count()
-      val tFold = timed {
+      val (_, tFold) = LocalSpark.timed {
         dedup.spanRemovalFold(fresh, col("doc_id"), col("text"),
           idx, n = 20).rdd.count()
       }
-      val tRebuild = timed {
+      val (_, tRebuild) = LocalSpark.timed {
         dedup.spanRemovalCensus(hist.unionByName(fresh),
           col("doc_id"), col("text"), n = 20, minDocs = 2).rdd.count()
       }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,20 +15,16 @@ import org.apache.spark.sql.streaming.Trigger
   * trigger), where the per-batch seconds measured here vanish against
   * minutes of real work.
   *
-  *   sbt "runMain graft.StreamBench /root/testdata/sf0.1"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.StreamBench <testdata>/sf0.1"
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
+    // state partitions = shuffle partitions, and each micro-batch pays
+    // one state-store commit per partition: pin 8 so the per-batch
+    // fixed cost measured here does not move with the core count
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     val nFiles = 16
     val src = Scratch.dir("graft_streambench").toString + "/events"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.Trigger
   * `StreamingQueryProgress.stateOperators` (the same observability
   * surface the q282 observer rides).
   *
-  *   sbt "runMain graft.StreamScaleBench /root/testdata/sf0.1 10"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.StreamScaleBench <testdata>/sf0.1 10"
   *
   * Backlog synthesis (mult×): `mult` copies of the events table —
   * copy c shifts event time by c·(span+1s) so stream time keeps
@@ -49,19 +49,14 @@ object StreamScaleBench {
     // checkpointing); compare walls/state against the default
     // HDFS-backed in-memory provider to price that insurance
     val rocksdb = args.length > 2 && args(2) == "rocksdb"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (rocksdb)
-      b.config("spark.sql.streaming.stateStore.providerClass",
+    val spark = LocalSpark.session()
+    // state rows and walls are reported per state partition count:
+    // pin 8 so the matrix reads the same at any core count
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    if (rocksdb)
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
-    else b).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val es = graft.streaming.EventStream
     val base = es.normalizeEventTime(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 
@@ -15,20 +15,13 @@ import org.apache.spark.sql.execution.FileSourceScanExec
   * "sort the corpus along which curve" — is exactly the estimator's
   * claim; here the claim meets the scan metrics.
   *
-  *   sbt "runMain graft.ZoneBench /root/testdata/sf0.1"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.ZoneBench <testdata>/sf0.1"
   */
 object ZoneBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
 
     // same derived columns and predicate family as q296
     val base = new graft.tables.Catalog(spark, sfDir).table("lineitem")

@@ -18,6 +18,16 @@ import org.apache.spark.sql.types._
 object EventStream {
   private val runIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Name prefix of the memory-sink temp views the drains register. */
+  private val sinkViewPrefix = "graft_stream_"
+
+  /** Drop every memory-sink view a drain left in the session catalog
+    * (`clearCache` does not release them). */
+  def dropSinkViews(spark: SparkSession): Unit =
+    spark.catalog.listTables().collect()
+      .filter(_.name.startsWith(sinkViewPrefix))
+      .foreach(t => spark.catalog.dropTempView(t.name))
+
   /** Shared daemon pool for overlapping INDEPENDENT per-batch sink
     * jobs inside a foreachBatch (guide §2.6): at local backlog sizes
     * each manifest append is a ~single-partition write whose wall is
@@ -594,7 +604,7 @@ object EventStream {
                       mode: String = "complete",
                       statePartitions: Int = 8): DataFrame =
     withStatePartitions(spark, statePartitions) {
-      val name = s"graft_stream_${runIds.incrementAndGet()}"
+      val name = s"$sinkViewPrefix${runIds.incrementAndGet()}"
       val q = agg.writeStream
         .format("memory").queryName(name)
         .outputMode(mode)
@@ -624,7 +634,7 @@ object EventStream {
       val l = observer.listener(spark)
       spark.streams.addListener(l)
       try {
-        val name = s"graft_stream_${runIds.incrementAndGet()}"
+        val name = s"$sinkViewPrefix${runIds.incrementAndGet()}"
         val q = agg.writeStream
           .format("memory").queryName(name)
           .outputMode(mode)

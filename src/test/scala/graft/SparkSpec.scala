@@ -5,18 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // pinned at 4 cores: spec fixtures and plan shapes assume 4
+  // shuffle partitions whatever SPARK_GRAFT_CPUS says
+  lazy val spark: SparkSession = LocalSpark.session(cores = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 
