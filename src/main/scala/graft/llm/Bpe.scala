@@ -187,8 +187,9 @@ object Bpe {
     * cutoff, same (freq desc, a asc, b asc) tie-break, same greedy
     * left-to-right non-overlapping merge pass — BpeSpec holds
     * trainLocal ≡ train as a law. `maxWords` guards the collect
-    * LOUDLY (count first): above it, fall back to the distributed
-    * trainer rather than silently pulling an unbounded table. The
+    * LOUDLY (count first): above it the call throws (require) and
+    * names the distributed trainer (train/trainWithStats) for the
+    * caller to use — it never silently pulls an unbounded table. The
     * tie-break compares Java strings (UTF-16 code units) — identical
     * to Spark's ordering on ASCII vocabularies, which every corpus
     * here is. */

@@ -620,54 +620,25 @@ object Dedup {
       .localCheckpoint()
     // DRIVER FAST PATH (guide §1.2: fix the algorithm before the
     // per-task work — and for a bounded edge set the fastest
-    // distributed algorithm is none at all): below the budget, pull
-    // the deduped edge list once and run union-find on the driver —
-    // microseconds instead of 2+ Spark jobs per pointer-jump round.
-    // The output is IDENTICAL by construction: the distributed loop's
-    // fixpoint labels every node with the minimum id reachable from
-    // it, which is exactly the component minimum union-find reports
-    // (DedupSpec pins local ≡ distributed on a fixture). Same
-    // discipline as Bpe.trainLocal: the edge list is already the
-    // REDUCED image (pair mining bounded it), the budget is loud, and
-    // past it the checkpointed distributed loop runs unchanged — at
-    // 100 TB a hot pair set simply stays on the cluster.
-    val budget = java.lang.Long.getLong("spark.graft.cc.localEdgeBudget",
-      sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES").map(_.toLong)
-        .getOrElse(2000000L))
-    val nEdges = edges.count() // cheap: counts the checkpointed blocks
-    if (nEdges <= budget && maxIter >= 25) {
-      val rows = edges.collect()
-      val parent = new java.util.HashMap[Long, Long](rows.length * 2)
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) { // path halving
-          val gp = parent.getOrDefault(p, p)
-          parent.put(x, gp); x = gp; p = parent.getOrDefault(x, x)
-        }
-        x
-      }
-      rows.foreach { r =>
-        val (rx, ry) = (find(r.getLong(0)), find(r.getLong(1)))
-        // union by MIN id: the root is always the component minimum,
-        // so labels read straight off find() with no second pass
-        if (rx < ry) parent.put(ry, rx)
-        else if (ry < rx) parent.put(rx, ry)
-      }
-      val nodes = new java.util.HashSet[Long](rows.length * 2)
-      rows.foreach(r => nodes.add(r.getLong(0)))
-      val spark = pairs.sparkSession
-      import scala.jdk.CollectionConverters._
-      val out = spark.createDataFrame(
-        nodes.asScala.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
-          .asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("comp",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      unpersistCheckpoint(edges)
-      return out
+    // distributed algorithm is none at all): when the deduped edge
+    // list fits [[graft.operators.DriverLocal]]'s byte budget (2
+    // cells per edge; the count reads the checkpointed blocks), pull
+    // it once and run union-find on the driver — microseconds instead
+    // of 2+ Spark jobs per pointer-jump round. The output is
+    // IDENTICAL by construction: the distributed loop's fixpoint
+    // labels every node with the minimum id reachable from it, which
+    // is exactly the component minimum union-find reports (DedupSpec
+    // pins local ≡ distributed on a fixture). Past the budget the
+    // checkpointed distributed loop runs unchanged — at 100 TB a hot
+    // pair set simply stays on the cluster.
+    val local =
+      if (maxIter >= 25) graft.operators.DriverLocal.collectWithin(edges, 2)
+      else None
+    local match {
+      case Some(rows) =>
+        unpersistCheckpoint(edges)
+        return componentsLocal(pairs.sparkSession, rows)
+      case None => ()
     }
     var labels = edges.select(col("x").as("id")).distinct()
       .withColumn("comp", col("id"))
@@ -712,6 +683,37 @@ object Dedup {
           "rounds — labels are not a fixpoint and clusters may be " +
           "incompletely merged; increase maxIter")
     labels
+  }
+
+  /** [[connectedComponents]] replayed on the driver over collected
+    * (x, y) edges (both directions): union-find with path halving,
+    * union by MIN id, so every node's root is its component minimum —
+    * the distributed fixpoint's label. */
+  private def componentsLocal(spark: org.apache.spark.sql.SparkSession,
+                              rows: Array[org.apache.spark.sql.Row])
+      : DataFrame = {
+    val parent = new java.util.HashMap[Long, Long](rows.length * 2)
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrDefault(x, x)
+      while (p != x) { // path halving
+        val gp = parent.getOrDefault(p, p)
+        parent.put(x, gp); x = gp; p = parent.getOrDefault(x, x)
+      }
+      x
+    }
+    rows.foreach { r =>
+      val (rx, ry) = (find(r.getLong(0)), find(r.getLong(1)))
+      // union by MIN id: the root is always the component minimum,
+      // so labels read straight off find() with no second pass
+      if (rx < ry) parent.put(ry, rx)
+      else if (ry < rx) parent.put(rx, ry)
+    }
+    val nodes = new java.util.HashSet[Long](rows.length * 2)
+    rows.foreach(r => nodes.add(r.getLong(0)))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(nodes.asScala.toSeq.map(n => (n, find(n))))
+      .toDF("id", "comp")
   }
 
   /** Free the executor blocks behind a localCheckpoint'ed frame (its
@@ -903,11 +905,6 @@ object Dedup {
   /** Portable simhash: bit-majority over [[md5TokenHashes]]. */
   def simhash64Portable(text: Column): Column =
     simhash64FromHashes(md5TokenHashes(text))
-
-  /** Staged SimHash (kept for API compatibility — the native expression
-    * is already single-pass, no staging needed). */
-  def withSimhash(df: DataFrame, text: Column, out: String): DataFrame =
-    df.withColumn(out, simhash64(text))
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -2,6 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import graft.operators.DriverLocal
 
 /** Distributed Lloyd k-means over an embedding column — the clustering
   * step the SemDeDup recipe and a learned IVF quantizer actually train
@@ -70,62 +72,49 @@ object KMeans {
     require(iters > 0, "k-means needs at least one Lloyd round")
     val c = emb.select(id.as("vec_id"), vec.cast("array<double>").as("cv"))
     // DRIVER FAST PATH (guide §1.2 — a bounded fit loop pays 2+ jobs
-    // per Lloyd round regardless of data size): under the row budget
-    // the (id, vector) table is pulled once and the loop replays
-    // in-memory. BIT-IDENTICAL only when every vector element is
-    // integer-valued (|x| < 2^40): per-(cell, dim) avg() sums are
-    // then EXACT doubles in any order, and the row-local cosine
-    // assignment replays the same fused loop — exactly the property
-    // the oracles already rely on (the q107 lloydRoundSql precedent).
-    // Non-integer embeddings or a big corpus fall through to the
-    // distributed loop unchanged (checked AFTER the collect, so the
-    // gate inspects the actual data, not an assumption). KMeansSpec
-    // pins local ≡ distributed incl. zero vectors and empty cells.
-    val localBudget = java.lang.Long.getLong(
-      "spark.graft.kmeans.localVecBudget",
-      sys.env.get("SPARK_GRAFT_KMEANS_LOCAL_VECS").map(_.toLong)
-        .getOrElse(500000L))
-    // BYTE-aware companion budget: the collect pulls rows×dims
-    // doubles, so a row count alone under-gates high-dim corpora (a
-    // 1024-dim corpus of 490k rows is ~4 GB — it must stay
-    // distributed, and the dimension check has to run BEFORE the
-    // collect, not after). Default 16M cells ≡ the old behaviour at
-    // the 32-dim bench corpora (500k × 32), ~128 MB of payload.
-    val cellBudget = java.lang.Long.getLong(
-      "spark.graft.kmeans.localCellBudget",
-      sys.env.get("SPARK_GRAFT_KMEANS_LOCAL_CELLS").map(_.toLong)
-        .getOrElse(16000000L))
-    val preGate = c.schema("vec_id").dataType ==
-      org.apache.spark.sql.types.LongType && {
-      // ONE pre-collect aggregate probes row count AND the widest
-      // vector (same job count as the old bare count())
-      val g = c.agg(count(lit(1)), max(size(col("cv"))))
-        .collect()(0)
-      val n = g.getLong(0)
-      val dims = if (g.isNullAt(1)) 0L else g.getInt(1).toLong
-      n > 0 && n <= localBudget && dims > 0 &&
-        n <= cellBudget / dims
-    }
-    if (preGate) {
-      val raw = c.collect()
-      val clean = !raw.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
-        r.getAs[scala.collection.Seq[Any]](1).exists(_ == null))
-      if (clean && raw.nonEmpty) {
-        val rows = raw.map { r =>
-          (r.getLong(0),
-            r.getAs[scala.collection.Seq[Double]](1).toArray) }
-        val integral = rows.forall(_._2.forall(x => x == math.rint(x)))
-        // exact-sum bound: with Σ|x| < 2^53 per (cell, dim) every
-        // partial sum is an exactly-representable integer, so the
-        // distributed avg() and the local loop agree bit-for-bit in
-        // ANY summation order (conservative: n·max|x| bounds Σ|x|)
-        val maxAbs = rows.iterator.flatMap(_._2.iterator)
-          .map(math.abs).foldLeft(0.0)(math.max)
-        val d0 = rows.head._2.length
-        if (integral && rows.length.toDouble * maxAbs < 9.0e15 &&
-            rows.forall(_._2.length == d0))
-          return fitLocal(emb.sparkSession, rows, k, iters)
-      }
+    // per Lloyd round regardless of data size): when the (id, vector)
+    // table fits [[graft.operators.DriverLocal]]'s byte budget at
+    // 1 + dims cells per row, it is pulled once and the loop replays
+    // in-memory. The dims come off ONE row (limit 1) and the gate's
+    // count reads no column, so only the collect scans the vectors; a
+    // ragged corpus is caught after the collect by the uniform-dims
+    // check below. BIT-IDENTICAL only when every vector element is
+    // integer-valued (|x| < 2^40): per-(cell, dim) avg() sums are then
+    // EXACT doubles in any order, and the row-local cosine assignment
+    // replays the same fused loop — exactly the property the oracles
+    // already rely on (the q107 lloydRoundSql precedent). Non-integer
+    // embeddings or a big corpus fall through to the distributed loop
+    // unchanged (checked AFTER the collect, so the gate inspects the
+    // actual data, not an assumption). KMeansSpec pins local ≡
+    // distributed incl. zero vectors and empty cells, and that an
+    // over-budget rows × dims corpus is never collected.
+    val dims =
+      if (c.schema("vec_id").dataType != LongType) 0
+      else c.select(size(col("cv"))).limit(1).collect().headOption
+        .filterNot(_.isNullAt(0)).fold(0)(_.getInt(0))
+    val local =
+      if (dims > 0) DriverLocal.collectWithin(c, 1 + dims) else None
+    local match {
+      case Some(raw) =>
+        val clean = !raw.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
+          r.getAs[scala.collection.Seq[Any]](1).exists(_ == null))
+        if (clean && raw.nonEmpty) {
+          val rows = raw.map { r =>
+            (r.getLong(0),
+              r.getAs[scala.collection.Seq[Double]](1).toArray) }
+          val integral = rows.forall(_._2.forall(x => x == math.rint(x)))
+          // exact-sum bound: with Σ|x| < 2^53 per (cell, dim) every
+          // partial sum is an exactly-representable integer, so the
+          // distributed avg() and the local loop agree bit-for-bit in
+          // ANY summation order (conservative: n·max|x| bounds Σ|x|)
+          val maxAbs = rows.iterator.flatMap(_._2.iterator)
+            .map(math.abs).foldLeft(0.0)(math.max)
+          val d0 = rows.head._2.length
+          if (integral && rows.length.toDouble * maxAbs < 9.0e15 &&
+              rows.forall(_._2.length == d0))
+            return fitLocal(emb.sparkSession, rows, k, iters)
+        }
+      case None => ()
     }
     var cents = Similarity.centroids(c, k)
     var means: DataFrame = null
@@ -221,18 +210,9 @@ object KMeans {
       }
       cents = means
     }
-    import scala.jdk.CollectionConverters._
-    val out = for (ci <- 0 until kk; j <- 0 until d)
-      yield org.apache.spark.sql.Row(
-        centIds(ci).toInt, j + 1, means(ci)(j))
-    spark.createDataFrame(out.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("c",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+    spark.createDataFrame(for (ci <- 0 until kk; j <- 0 until d)
+        yield (centIds(ci).toInt, j + 1, means(ci)(j)))
+      .toDF("cell", "dim", "c")
   }
 
   /** Final cluster assignment under a fitted (cell, dim, c) table. */

@@ -12,7 +12,7 @@ final case class CurationAborted(stage: String, nIn: Long, nKept: Long,
                                  floor: Double)
     extends RuntimeException(
       s"curation aborted at stage '$stage': kept $nKept of $nIn rows " +
-        f"(${if (nIn == 0) 1.0 else nKept.toDouble / nIn}%.4f " +
+        f"(${PipelineObserver.keptFrac(nIn, nKept)}%.4f " +
         f"< floor $floor%.4f)")
 
 /** Per-stage row-count observability for composed pipelines, built on
@@ -44,15 +44,10 @@ final class PipelineObserver {
     * in pipeline order. Call only AFTER the terminal action (the
     * underlying Observation.get blocks until its job completes). An
     * empty input stage reports kept_frac 1.0 — nothing was lost. */
-  def stageMetrics(): Seq[(String, Long, Long, Double)] = {
-    val counts = points.toSeq.map { case (n, o) =>
+  def stageMetrics(): Seq[(String, Long, Long, Double)] =
+    PipelineObserver.stagePairs(points.toSeq.map { case (n, o) =>
       (n, o.get("rows").asInstanceOf[Long])
-    }
-    counts.sliding(2).collect { case Seq((_, nIn), (name, nKept)) =>
-      (name, nIn, nKept,
-        if (nIn == 0) 1.0 else nKept.toDouble / nIn)
-    }.toSeq
-  }
+    })
 
   /** The circuit breaker: throw [[CurationAborted]] at the FIRST stage
     * whose kept fraction is below `floor`. */
@@ -71,4 +66,21 @@ final class PipelineObserver {
       (ix, s, i, k, f)
     }.toDF("stage_ix", "stage", "n_in", "n_kept", "kept_frac")
   }
+}
+
+object PipelineObserver {
+
+  /** Kept fraction of one stage; an empty input reports 1.0 — nothing
+    * was lost. */
+  private[graft] def keptFrac(nIn: Long, nKept: Long): Double =
+    if (nIn == 0) 1.0 else nKept.toDouble / nIn
+
+  /** (stage, n_in, n_kept, kept_frac) per consecutive pair of
+    * (checkpoint, rows) counts, in pipeline order — the pairing the
+    * batch and the streaming observer share. */
+  private[graft] def stagePairs(counts: Seq[(String, Long)])
+      : Seq[(String, Long, Long, Double)] =
+    counts.sliding(2).collect { case Seq((_, nIn), (name, nKept)) =>
+      (name, nIn, nKept, keptFrac(nIn, nKept))
+    }.toSeq
 }

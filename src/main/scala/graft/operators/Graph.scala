@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Iterative graph measures as plain DataFrame joins — PageRank over
   * an edge list, plus the co-occurrence edge builder that turns a
@@ -40,33 +41,29 @@ object Graph {
     * [[pageRank]] loop. */
   private val MatEvery = 6
 
-  /** Edge budget for the DRIVER fast paths of the bounded-round graph
-    * loops (guide §1.2: the fastest distributed algorithm for a small
-    * graph is none at all — a fixed-round loop pays 2+ Spark jobs per
-    * round regardless of data size). At or below the budget the
-    * deduped edge list is pulled once and the loop runs in-memory,
-    * producing BIT-IDENTICAL output (integer ops replay exactly;
-    * the deterministic PageRank fold is the same sorted left fold the
-    * engine's aggregate() runs — GraphSpec pins local ≡ distributed
-    * for every loop); above it the checkpointed distributed loop runs
-    * unchanged — at 100 TB a real graph simply stays on the cluster.
-    * Same discipline as Bpe.trainLocal and the connectedComponents
-    * fast path. 4M edges ≈ 64 MB on the driver. */
-  private[graft] def localEdgeBudget: Long =
-    java.lang.Long.getLong("spark.graft.graph.localEdgeBudget",
-      sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_EDGES").map(_.toLong)
-        .getOrElse(4000000L))
+  /** The DRIVER fast path of every bounded-round graph loop (guide
+    * §1.2: the fastest distributed algorithm for a small graph is none
+    * at all — a fixed-round loop pays 2+ Spark jobs per round
+    * regardless of data size): an all-Long edge frame is collected
+    * through [[DriverLocal.collectWithin]], one cell per column, and
+    * the loop replays in memory with BIT-IDENTICAL output (integer ops
+    * replay exactly; the deterministic PageRank fold is the same
+    * sorted left fold the engine's aggregate() runs — GraphSpec pins
+    * local ≡ distributed for every loop). None — a non-Long id column
+    * (string-id graphs) or a payload over the budget — means the
+    * distributed loop runs unchanged. */
+  private def localLongs(df: DataFrame): Option[Array[Row]] =
+    if (df.schema.forall(_.dataType == LongType))
+      DriverLocal.collectWithin(df, df.columns.length)
+    else None
 
-  private def isLong(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType == org.apache.spark.sql.types.LongType
+  /** [[localLongs]] over a two-column edge frame, as (src, dst)
+    * pairs. */
+  private def localEdges(df: DataFrame): Option[Array[(Long, Long)]] =
+    localLongs(df).map(_.map(r => (r.getLong(0), r.getLong(1))))
 
-  private def longLongSchema(n1: String, n2: String)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(n1,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(n2,
-        org.apache.spark.sql.types.LongType, nullable = false)))
+  /** The driver-side wedge-volume cap: 4× the budget's edge count. */
+  private def maxLocalWedges: Long = 4L * DriverLocal.maxRows(2)
 
   /** The deterministic-mode per-node reduction, replayed on the
     * driver: sort the contribution values ascending and left-fold
@@ -80,14 +77,6 @@ object Graph {
     var i = 0
     while (i < xs.length) { acc += xs(i); i += 1 }
     acc
-  }
-
-  private def rowsToDf(spark: org.apache.spark.sql.SparkSession,
-                       rows: Seq[org.apache.spark.sql.Row],
-                       schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Undirected degree census over canonical (a < b) edges. */
@@ -127,7 +116,7 @@ object Graph {
     // distributed join (which spreads the wedges) handles it
     val wedgeVol = out.valuesIterator.map { vs =>
       vs.length.toLong * vs.length.toLong }.sum
-    if (wedgeVol > 4L * localEdgeBudget) return None
+    if (wedgeVol > maxLocalWedges) return None
     val tri = mutable.HashMap.empty[Long, Long]
     def bump(nd: Long): Unit = tri.update(nd, tri.getOrElse(nd, 0L) + 1L)
     out.foreach { case (u, vs) =>
@@ -206,25 +195,17 @@ object Graph {
       .filter(col("a") =!= col("b"))
       .distinct()
       .persist(mad)
-    // DRIVER FAST PATH: the degree-oriented enumeration is exact
-    // integer counting — a driver replay (same orientation, same
-    // wedge bound Σ min-deg² ≈ O(m^1.5)) is identical by construction
-    // (GraphSpec law). One count job against the persisted canon
-    // decides; past the budget the join pipeline runs unchanged.
-    if (isLong(canon, "a") && isLong(canon, "b") &&
-        canon.count() <= localEdgeBudget) {
-      val rows = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
-      triangleCountsLocalMap(rows) match {
-        case Some(tri) =>
-          canon.unpersist(blocking = false)
-          val nodes = tri.keys.toArray
-          java.util.Arrays.sort(nodes)
-          return rowsToDf(edges.sparkSession,
-            nodes.toSeq.map(nd =>
-              org.apache.spark.sql.Row(nd, tri(nd))),
-            longLongSchema("node", "triangles"))
-        case None => () // wedge volume too big: distributed path below
-      }
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localEdges]]): the
+    // degree-oriented enumeration is exact integer counting — a driver
+    // replay (same orientation, same wedge bound Σ min-deg² ≈ O(m^1.5))
+    // is identical by construction (GraphSpec law). Past the budget or
+    // the wedge cap the join pipeline runs unchanged.
+    localEdges(canon).flatMap(triangleCountsLocalMap) match {
+      case Some(tri) =>
+        return edges.sparkSession.createDataFrame(
+          tri.keys.toSeq.sorted.map(nd => (nd, tri(nd))))
+          .toDF("node", "triangles")
+      case None => ()
     }
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
@@ -275,44 +256,24 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    // DRIVER FAST PATH: degree census + triangle counts + the one
-    // pinned-order IEEE division, all replayed locally (GraphSpec
-    // law) — 2.0 * tri.toDouble / (d*(d-1)).toDouble matches the
-    // distributed cast-then-divide exactly.
-    if (isLong(canon, "a") && isLong(canon, "b")) {
-      val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val probe = canon.persist(mad)
-      if (probe.count() <= localEdgeBudget) {
-        val rows = probe.collect().map(r => (r.getLong(0), r.getLong(1)))
-        triangleCountsLocalMap(rows) match {
-          case Some(tri) =>
-            probe.unpersist(blocking = false)
-            val dl = degLocal(rows)
-            val nodes = dl.keys.toArray
-            java.util.Arrays.sort(nodes)
-            return rowsToDf(edges.sparkSession,
-              nodes.toSeq.map { nd =>
-                val d = dl(nd)
-                val t = tri.getOrElse(nd, 0L)
-                val coeff =
-                  if (d >= 2) (2.0 * t.toDouble) / (d * (d - 1)).toDouble
-                  else 0.0
-                org.apache.spark.sql.Row(nd, d, t, coeff)
-              },
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("node",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("d",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("triangles",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("coeff",
-                  org.apache.spark.sql.types.DoubleType,
-                  nullable = false))))
-          case None => () // wedge volume too big: distributed below
-        }
-      }
-      probe.unpersist(blocking = false)
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localEdges]]): degree census +
+    // triangle counts + the one pinned-order IEEE division, all replayed
+    // locally (GraphSpec law) — 2.0 * tri.toDouble / (d*(d-1)).toDouble
+    // matches the distributed cast-then-divide exactly.
+    localEdges(canon).flatMap(rows =>
+        triangleCountsLocalMap(rows).map((rows, _))) match {
+      case Some((rows, tri)) =>
+        val dl = degLocal(rows)
+        return edges.sparkSession.createDataFrame(
+          dl.keys.toSeq.sorted.map { nd =>
+            val d = dl(nd)
+            val t = tri.getOrElse(nd, 0L)
+            val coeff =
+              if (d >= 2) (2.0 * t.toDouble) / (d * (d - 1)).toDouble
+              else 0.0
+            (nd, d, t, coeff)
+          }).toDF("node", "d", "triangles", "coeff")
+      case None => ()
     }
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
@@ -350,17 +311,19 @@ object Graph {
     val seed = seeds.select(col("node")).distinct()
       .withColumn("hop", lit(0)).persist(mad)
     seed.count()
-    // DRIVER FAST PATH: min-hop BFS is pure integer frontier
-    // expansion — exact on the driver (GraphSpec law). Long node ids
-    // only (the pipeline-staleness caller uses string ids and falls
-    // through to the distributed loop).
-    if (isLong(e, "src") && isLong(e, "dst") && isLong(seed, "node") &&
-        e.count() <= localEdgeBudget) {
-      val eRows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val sRows = seed.collect().map(_.getLong(0))
-      e.unpersist(blocking = false)
-      seed.unpersist(blocking = false)
-      return bfsHopsLocal(edges.sparkSession, eRows, sRows, maxHops)
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localEdges]]): min-hop BFS is
+    // pure integer frontier expansion — exact on the driver (GraphSpec law).
+    // Long node ids only (the pipeline-staleness caller uses string ids and
+    // falls through to the distributed loop).
+    val eLocal =
+      if (seed.schema("node").dataType == LongType) localEdges(e)
+      else None
+    eLocal match {
+      case Some(eRows) =>
+        val sRows = seed.collect().map(_.getLong(0))
+        seed.unpersist(blocking = false)
+        return bfsHopsLocal(edges.sparkSession, eRows, sRows, maxHops)
+      case None => ()
     }
     // visited = lazy union of MATERIALIZED per-hop frontier caches —
     // each round costs exactly ONE action (the frontier count that
@@ -421,16 +384,9 @@ object Graph {
       }
       frontier = next.toSet
     }
-    val nodes = visited.keys.toArray
-    java.util.Arrays.sort(nodes)
-    rowsToDf(spark,
-      nodes.toSeq.map(nd =>
-        org.apache.spark.sql.Row(nd, visited(nd))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("hop",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
+    spark.createDataFrame(
+      visited.keys.toSeq.sorted.map(nd => (nd, visited(nd))))
+      .toDF("node", "hop")
   }
 
   /** Common-neighbor link prediction over an UNDIRECTED edge set:
@@ -459,24 +415,22 @@ object Graph {
       .filter(col("a") =!= col("b"))
       .distinct()
       .persist(mad)
-    // DRIVER FAST PATH: exact integer cn/jaccard with a total-order
-    // top-K (jac_num desc, x, y) — a driver replay is identical
-    // (GraphSpec law). Guarded TWICE: the edge budget, and the actual
-    // wedge volume Σ d·(d−1)/2 over wedge centers (known exactly once
-    // degrees are in hand) — a hub-heavy uncapped graph falls through
-    // to the distributed join, which AQE can skew-split.
-    if (isLong(canon, "a") && isLong(canon, "b") &&
-        canon.count() <= localEdgeBudget) {
-      val rows = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val dl = degLocal(rows)
-      val wedgeVol = dl.valuesIterator
-        .filter(d => maxWedgeDegree.forall(d <= _))
-        .map(d => d * (d - 1) / 2).sum
-      if (wedgeVol <= 4L * localEdgeBudget) {
-        canon.unpersist(blocking = false)
-        return linkPredictionLocal(edges.sparkSession, rows, dl, topK,
-          maxWedgeDegree)
-      }
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localEdges]]): exact integer
+    // cn/jaccard with a total-order top-K (jac_num desc, x, y) — a driver
+    // replay is identical (GraphSpec law). Guarded TWICE: the byte budget,
+    // and the actual wedge volume Σ d·(d−1)/2 over wedge centers (known
+    // exactly once degrees are in hand) — a hub-heavy uncapped graph falls
+    // through to the distributed join, which AQE can skew-split.
+    localEdges(canon) match {
+      case Some(rows) =>
+        val dl = degLocal(rows)
+        val wedgeVol = dl.valuesIterator
+          .filter(d => maxWedgeDegree.forall(d <= _))
+          .map(d => d * (d - 1) / 2).sum
+        if (wedgeVol <= maxLocalWedges)
+          return linkPredictionLocal(edges.sparkSession, rows, dl, topK,
+            maxWedgeDegree)
+      case None => ()
     }
     val adj = canon.select(col("a").as("n"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("n"), col("a").as("nbr")))
@@ -537,18 +491,7 @@ object Graph {
       .toArray
       .sortBy { case (x, y, c, _) => (-c, x, y) }
       .take(topK)
-    rowsToDf(spark,
-      cand.toSeq.map { case (x, y, c, d) =>
-        org.apache.spark.sql.Row(x, y, c, d) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("x",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("y",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("jac_num",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("jac_den",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    spark.createDataFrame(cand.toSeq).toDF("x", "y", "jac_num", "jac_den")
   }
 
   /** The naive lowest-id two-join triangle formulation (wedge volume
@@ -596,20 +539,14 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    // DRIVER FAST PATH: the loop is pure integer arithmetic with
-    // pinned tie-breaks (plurality count, min label), so a driver
-    // replay is exact by construction (GraphSpec law). One count job
-    // against the persisted canonical edges decides; past the budget
-    // the persisted probe is dropped and the distributed loop runs
-    // unchanged off the lazy plan.
-    if (isLong(canon, "a") && isLong(canon, "b")) {
-      val probe = canon.persist(mad)
-      if (probe.count() <= localEdgeBudget) {
-        val rows = probe.collect().map(r => (r.getLong(0), r.getLong(1)))
-        probe.unpersist(blocking = false)
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localEdges]]): the loop is pure
+    // integer arithmetic with pinned tie-breaks (plurality count, min label),
+    // so a driver replay is exact by construction (GraphSpec law). Past the
+    // budget the distributed loop runs unchanged off the lazy plan.
+    localEdges(canon) match {
+      case Some(rows) =>
         return labelPropagationLocal(edges.sparkSession, rows, rounds)
-      }
-      probe.unpersist(blocking = false)
+      case None => ()
     }
     val adj = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
@@ -676,9 +613,8 @@ object Graph {
       }
       labels = next
     }
-    rowsToDf(spark,
-      nodes.toSeq.map(nd => org.apache.spark.sql.Row(nd, labels(nd))),
-      longLongSchema("node", "label"))
+    spark.createDataFrame(nodes.toSeq.map(nd => (nd, labels(nd))))
+      .toDF("node", "label")
   }
 
   /** Fixed-iteration PageRank over a (src, dst) edge list: returns
@@ -716,28 +652,28 @@ object Graph {
     val e = (if (weighted) edges.select(col("src"), col("dst"), col("w"))
              else edges.select(col("src"), col("dst"), lit(1L).as("w")))
       .persist(mad)
-    // DRIVER FAST PATH (deterministic mode only — its value-sorted
-    // fold IS the replayable reduction; the plain-sum scale mode has
-    // no driver-reproducible ordering, so it always stays
-    // distributed): under [[localEdgeBudget]] the edge list is pulled
-    // once and the fixed-round loop replays in-memory with the exact
-    // IEEE op sequence of the distributed plan — bit-identical by
-    // construction, pinned by GraphSpec's local≡distributed laws.
-    // The count is one cheap job against the just-persisted blocks;
-    // past the budget the loop below runs unchanged.
-    if (deterministic && isLong(e, "src") && isLong(e, "dst") &&
-        e.schema("w").dataType == org.apache.spark.sql.types.LongType &&
-        restart.forall(s => s.schema.head.dataType ==
-          org.apache.spark.sql.types.LongType) &&
-        e.count() <= localEdgeBudget) {
-      val rows = e.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2)))
-      e.unpersist(blocking = false)
-      val seedArr = restart.map(s =>
-        s.select(col(s.columns.head)).distinct().collect()
-          .map(_.getLong(0)))
-      return pageRankLocalDet(edges.sparkSession, rows, iterations,
-        damping, danglingMass, seedArr)
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localLongs]], deterministic
+    // mode only — its value-sorted fold IS the replayable reduction; the
+    // plain-sum scale mode has no driver-reproducible ordering, so it
+    // always stays distributed): the (src, dst, w) list is pulled once
+    // and the fixed-round loop replays in-memory with the exact IEEE op
+    // sequence of the distributed plan — bit-identical by construction,
+    // pinned by GraphSpec's local≡distributed laws. Past the budget the
+    // loop below runs unchanged.
+    val eLocal =
+      if (deterministic &&
+          restart.forall(_.schema.head.dataType == LongType)) localLongs(e)
+      else None
+    eLocal match {
+      case Some(eRows) =>
+        val rows = eRows.map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val seedArr = restart.map(s =>
+          s.select(col(s.columns.head)).distinct().collect()
+            .map(_.getLong(0)))
+        return pageRankLocalDet(edges.sparkSession, rows, iterations,
+          damping, danglingMass, seedArr)
+      case None => ()
     }
     // deg/nodes/N are referenced EVERY round — stage them once so no
     // iteration re-shuffles the edge list for its side frames
@@ -913,13 +849,8 @@ object Graph {
       }
       pr = next
     }
-    rowsToDf(spark,
-      nodes.toSeq.map(nd => org.apache.spark.sql.Row(nd, pr(nd))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("pr",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+    spark.createDataFrame(nodes.toSeq.map(nd => (nd, pr(nd))))
+      .toDF("node", "pr")
   }
 
   /** FIXED-ROUND k-core peeling over a symmetric edge set (the
@@ -941,19 +872,13 @@ object Graph {
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     var e = edges.select(col("src"), col("dst"))
-    // DRIVER FAST PATH: peeling is integer degree censuses + set
-    // filters — exact on the driver (GraphSpec law). One count job
-    // against the persisted probe decides; past the budget the lazy
-    // round-chained plan below runs unchanged.
-    if (isLong(e, "src") && isLong(e, "dst")) {
-      val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val probe = e.persist(mad)
-      if (probe.count() <= localEdgeBudget) {
-        val rows = probe.collect().map(r => (r.getLong(0), r.getLong(1)))
-        probe.unpersist(blocking = false)
+    // DRIVER FAST PATH ([[DriverLocal]] via [[localEdges]]): peeling is
+    // integer degree censuses + set filters — exact on the driver (GraphSpec
+    // law). Past the budget the lazy round-chained plan below runs unchanged.
+    localEdges(e) match {
+      case Some(rows) =>
         return kCorePeelLocal(edges.sparkSession, rows, k, rounds)
-      }
-      probe.unpersist(blocking = false)
+      case None => ()
     }
     for (_ <- 1 to rounds) {
       val bad = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
@@ -983,11 +908,8 @@ object Graph {
     val deg = mutable.HashMap.empty[Long, Long]
     edges.foreach { case (s, _) =>
       deg.update(s, deg.getOrElse(s, 0L) + 1L) }
-    val nodes = deg.keys.toArray
-    java.util.Arrays.sort(nodes)
-    rowsToDf(spark,
-      nodes.toSeq.map(nd => org.apache.spark.sql.Row(nd, deg(nd))),
-      longLongSchema("node", "deg"))
+    spark.createDataFrame(deg.keys.toSeq.sorted.map(nd => (nd, deg(nd))))
+      .toDF("node", "deg")
   }
 
   /** [[kCorePeel]] to the FIXPOINT: peel until a round removes no

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming layer (SURVEY.md §2l).
@@ -182,14 +182,6 @@ object EventStream {
       .groupBy((window(col(tsCol), width) +: groupCols.map(col))
         .toIndexedSeq: _*)
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
-  /** Sliding event-time aggregation. */
-  def slidingAgg(events: DataFrame, tsCol: String, width: String,
-                 slide: String, watermark: String): DataFrame =
-    events.withColumn(tsCol, asEventTime(tsCol))
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width, slide))
-      .agg(count(lit(1)).as("n"))
 
   /** Session windows (gap-based), the streaming twin of
     * operators.Sessionize. */
@@ -603,16 +595,7 @@ object EventStream {
   def runToCompletion(spark: SparkSession, agg: DataFrame,
                       mode: String = "complete",
                       statePartitions: Int = 8): DataFrame =
-    withStatePartitions(spark, statePartitions) {
-      val name = s"$sinkViewPrefix${runIds.incrementAndGet()}"
-      val q = agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    }
+    drainToMemory(spark, agg, mode, statePartitions)(_ => ())
 
   /** [[runToCompletion]] with per-batch pipeline observability: the
     * observer's listener folds every micro-batch's stage metrics as
@@ -629,22 +612,32 @@ object EventStream {
   def runToCompletionObserved(spark: SparkSession, agg: DataFrame,
                               observer: StreamPipelineObserver,
                               mode: String = "complete",
-                              statePartitions: Int = 8): DataFrame =
+                              statePartitions: Int = 8): DataFrame = {
+    val l = observer.listener(spark)
+    spark.streams.addListener(l)
+    try drainToMemory(spark, agg, mode, statePartitions) { q =>
+      q.recentProgress.foreach(observer.ingest)
+      observer.violation.foreach(throw _)
+    } finally spark.streams.removeListener(l)
+  }
+
+  /** The drain both [[runToCompletion]] variants share: start `agg`
+    * against a fresh memory-sink view with Trigger.AvailableNow, wait
+    * for the backlog to drain, run `afterDrain` on the terminated
+    * query, and return the sink view. */
+  private def drainToMemory(spark: SparkSession, agg: DataFrame,
+                            mode: String, statePartitions: Int)
+      (afterDrain: StreamingQuery => Unit): DataFrame =
     withStatePartitions(spark, statePartitions) {
-      val l = observer.listener(spark)
-      spark.streams.addListener(l)
-      try {
-        val name = s"$sinkViewPrefix${runIds.incrementAndGet()}"
-        val q = agg.writeStream
-          .format("memory").queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress.foreach(observer.ingest)
-        observer.violation.foreach(throw _)
-        spark.table(name)
-      } finally spark.streams.removeListener(l)
+      val name = s"$sinkViewPrefix${runIds.incrementAndGet()}"
+      val q = agg.writeStream
+        .format("memory").queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      afterDrain(q)
+      spark.table(name)
     }
 
   /** Stateful-operator parallelism for a LOCAL drain: every stateful

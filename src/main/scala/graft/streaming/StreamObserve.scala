@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.llm.CurationAborted
+import graft.llm.{CurationAborted, PipelineObserver}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener,
@@ -82,11 +82,10 @@ final class StreamPipelineObserver(keptFloor: Option[Double] = None) {
         // incomplete event also skips)
         if (counts.size != names.size) None
         else {
-          val rows = counts.sliding(2).collect {
-            case Seq((_, nIn), (name, nKept)) =>
-              (batchId, name, nIn, nKept,
-                if (nIn == 0) 1.0 else nKept.toDouble / nIn)
-          }.toSeq
+          val rows = PipelineObserver.stagePairs(counts).map {
+            case (name, nIn, nKept, frac) =>
+              (batchId, name, nIn, nKept, frac)
+          }
           batches ++= rows
           val v = keptFloor.flatMap(floor =>
             rows.find(_._5 < floor).map {

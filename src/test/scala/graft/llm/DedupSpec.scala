@@ -227,7 +227,7 @@ class DedupSpec extends SparkSpec {
       .toDF("a", "b")
     val local = Dedup.connectedComponents(pairs, col("a"), col("b"))
       .as[(Long, Long)].collect().toMap
-    val key = "spark.graft.cc.localEdgeBudget"
+    val key = "spark.graft.local.maxBytes"
     System.setProperty(key, "0")
     try {
       val dist = Dedup.connectedComponents(pairs, col("a"), col("b"))

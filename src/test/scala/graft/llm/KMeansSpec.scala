@@ -77,9 +77,9 @@ class KMeansSpec extends SparkSpec {
     def m = meansMap(KMeans.fit(iv, $"vec_id", $"embedding",
       k = 2, iters = 3))
     val local = m
-    System.setProperty("spark.graft.kmeans.localVecBudget", "0")
+    System.setProperty("spark.graft.local.maxBytes", "0")
     val dist = try m
-      finally System.clearProperty("spark.graft.kmeans.localVecBudget")
+      finally System.clearProperty("spark.graft.local.maxBytes")
     assert(local.keySet === dist.keySet)
     local.foreach { case (k2, v) =>
       assert(java.lang.Double.doubleToLongBits(v) ===
@@ -102,13 +102,13 @@ class KMeansSpec extends SparkSpec {
       (3L, Seq(0L, 10L, 2L)), (5L, Seq(2L, 8L, 1L)),
       (6L, Seq(0L, 0L, 0L))
     ).toDF("vec_id", "embedding")
-    // 7 rows × 3 dims = 21 collected cells: a budget of 20 must
-    // refuse the collect even though the ROW budget (500k) is nowhere
-    // near — the dimension check runs BEFORE any driver pull
-    System.setProperty("spark.graft.kmeans.localCellBudget", "20")
+    // 7 rows × (1 id + 3 dims) × 8 = 224 collected bytes: a budget of
+    // 100 bytes must refuse the collect even though the 7 ids alone
+    // (56 bytes) fit — the dimension check runs BEFORE any driver pull
+    System.setProperty("spark.graft.local.maxBytes", "100")
     val dist = try KMeans.fit(iv, $"vec_id", $"embedding",
         k = 2, iters = 3)
-      finally System.clearProperty("spark.graft.kmeans.localCellBudget")
+      finally System.clearProperty("spark.graft.local.maxBytes")
     // the distributed loop returns a checkpoint-backed frame (a
     // LogicalRDD); the driver fast path returns a LocalRelation —
     // the plan shape IS the proof no collect happened

@@ -261,9 +261,9 @@ class GraphSpec extends SparkSpec {
     * the distributed loop is exercised; the default call takes the
     * local path on these small fixtures. */
   private def distributed[A](f: => A): A = {
-    System.setProperty("spark.graft.graph.localEdgeBudget", "0")
+    System.setProperty("spark.graft.local.maxBytes", "0")
     try f
-    finally System.clearProperty("spark.graft.graph.localEdgeBudget")
+    finally System.clearProperty("spark.graft.local.maxBytes")
   }
 
   /** Sorted row images with doubles compared by BIT PATTERN — the
